@@ -12,6 +12,7 @@ collectives map to Spark shuffle/broadcast/aggregate primitives (see SURVEY.md
 section 2 for the operator-by-operator mapping with reference citations).
 """
 
+from parallelcovertree_spark import _worker_zipimport  # noqa: F401  (zipimport fix)
 from parallelcovertree_spark.session import get_spark
 
 __all__ = ["get_spark"]

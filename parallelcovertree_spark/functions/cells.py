@@ -92,9 +92,23 @@ def cell_ids_np(x: np.ndarray, y: np.ndarray, res: float) -> np.ndarray:
     return (ix + _OFF) * _SHIFT + (iy + _OFF)
 
 
+def cell_side(radius: float) -> float:
+    """Grid cell side for a radius-``radius`` search: ``r·(1+1e-9)``.
+
+    A side of exactly r can drop a pair whose computed distance is r: with
+    x = -5e-324 and x' = 0.1 at r = 0.1, ``floor(x/r) = -1`` and
+    ``floor(x'/r) = 1``, two cells apart. With the margin, the quotient gap
+    of a within-r pair is at most about 1 - 1e-9, which the rounding of
+    ``x/side`` cannot push to 1 while ``|x/side| < 2^20`` (the range the key
+    layout holds), so the 1-ring holds every candidate.
+    Every radius path (grid ε-joins, tree stage 1/2, the numpy finisher)
+    buckets with this side."""
+    return float(radius) * (1.0 + 1e-9)
+
+
 def resolution_for_radius(radius: float) -> float:
-    """Cell side = query radius ⇒ all neighbors within ``radius`` of a point
-    lie inside the point's 1-ring (9 cells). This is the grid analog of the
-    reference's ball-cover pruning (triangle-inequality descent,
-    /root/reference/src/CoverTree.cpp:367)."""
+    """Nominal grid resolution for a radius: the radius itself. The 1-ring
+    at (about) this side is the grid analog of the reference's ball-cover
+    pruning (triangle-inequality descent, CoverTree.cpp:367); the radius
+    paths bucket at ``cell_side(radius)``, which adds the rounding margin."""
     return float(radius)

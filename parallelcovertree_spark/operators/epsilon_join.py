@@ -4,12 +4,13 @@ The reference answers "all pairs within distance r" by per-point cover-tree
 traversal with triangle-inequality pruning
 (``/root/reference/src/CoverTree.cpp:356-384``, brute-force definition
 ``programs/epsilon_graph.cpp:113-118``). The idiomatic Spark physical plan is
-different: bucket points into grid cells of side r, equi-join each point's
-cell against the 1-ring (9 cells) of candidates, then apply the exact distance
-predicate. Catalyst gets an equi-join it can hash-partition; the ring
-expansion IS the pruning (a candidate outside the ring is provably farther
-than r). AQE skew-join plus optional explicit salting handles hot cells
-(web data clusters; the reference's analog is its LPT hub placement,
+different: bucket points into grid cells of side ``cell_side(r)`` (r plus
+a 1e-9 rounding margin), equi-join each point's cell against the 1-ring
+(9 cells) of candidates, then apply the exact distance predicate. Catalyst
+gets an equi-join it can hash-partition; the ring expansion IS the pruning
+(a candidate outside the ring is provably farther than r). AQE skew-join
+plus optional explicit salting handles hot cells (web data clusters; the
+reference's analog is its LPT hub placement,
 ``src/DistCoverTree.cpp:726-758``).
 
 Semantics pinned to the reference oracle: self-loops included (d(u,u)=0 ≤ r),
@@ -21,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from parallelcovertree_spark.functions.cells import explode_k_ring, with_cell
+from parallelcovertree_spark.functions.cells import cell_side, explode_k_ring, with_cell
 from parallelcovertree_spark.functions.geo import dist2_expr
 
 
@@ -53,10 +54,11 @@ def epsilon_self_join(
       sub-keys — blows the whole corpus up ``9·salt``×; kept for tests and
       as the blunt fallback when no histogram is available.
     """
-    res = float(radius)
+    r = float(radius)
+    side = cell_side(r)
     if hot_cells is None and salt == 0:
         return _epsilon_self_join_half(
-            points, res, id_col, x, y, include_self, emit_dist2
+            points, r, id_col, x, y, include_self, emit_dist2
         )
     left = with_cell(
         points.select(
@@ -64,7 +66,7 @@ def epsilon_self_join(
             F.col(x).cast("double").alias("sx"),
             F.col(y).cast("double").alias("sy"),
         ),
-        res, x="sx", y="sy", out="_cell",
+        side, x="sx", y="sy", out="_cell",
     )
     right = explode_k_ring(
         points.select(
@@ -72,7 +74,7 @@ def epsilon_self_join(
             F.col(x).cast("double").alias("tx"),
             F.col(y).cast("double").alias("ty"),
         ),
-        res, k=1, x="tx", y="ty", out="_cell",
+        side, k=1, x="tx", y="ty", out="_cell",
     )
     keys = ["_cell"]
     if hot_cells is not None:
@@ -113,7 +115,7 @@ def epsilon_self_join(
     # a driver-side broadcast of the exploded side and serializes)
     pairs = left.join(right.hint("shuffle_hash"), on=keys, how="inner")
     d2 = dist2_expr("sx", "sy", "tx", "ty")
-    cond = d2 <= F.lit(res * res)
+    cond = d2 <= F.lit(r * r)
     if not include_self:
         cond = cond & (F.col("src") != F.col("dst"))
     out_cols = [F.col("src"), F.col("dst")]
@@ -130,7 +132,7 @@ _HALF_DIRS = [(0, 0), (1, 0), (1, 1), (0, 1), (-1, 1)]
 
 def _epsilon_self_join_half(
     points: DataFrame,
-    res: float,
+    r: float,
     id_col: str,
     x: str,
     y: str,
@@ -146,13 +148,14 @@ def _epsilon_self_join_half(
     for asymmetric query×corpus joins)."""
     from parallelcovertree_spark.functions.cells import cell_id_from_ix, cell_ix
 
+    side = cell_side(r)
     base = points.select(
         F.col(id_col).alias("src"),
         F.col(x).cast("double").alias("sx"),
         F.col(y).cast("double").alias("sy"),
     )
-    left = with_cell(base, res, x="sx", y="sy", out="_cell")
-    ix, iy = cell_ix("tx", res), cell_ix("ty", res)
+    left = with_cell(base, side, x="sx", y="sy", out="_cell")
+    ix, iy = cell_ix("tx", side), cell_ix("ty", side)
     dirs = F.array(*[
         F.struct(
             cell_id_from_ix(ix + F.lit(dx), iy + F.lit(dy)).alias("c"),
@@ -174,7 +177,7 @@ def _epsilon_self_join_half(
         left.join(right.hint("shuffle_hash"), "_cell")
         # same-cell rows pair each {a,b} once via a.id < b.id (also drops
         # a==a); cross-cell rows are unique by the half-direction choice
-        .where((d2 <= F.lit(res * res)) & (~F.col("_same") | (F.col("src") < F.col("dst"))))
+        .where((d2 <= F.lit(r * r)) & (~F.col("_same") | (F.col("src") < F.col("dst"))))
         .select("src", "dst", d2.alias("dist2"))
     )
     both = once.select(
@@ -217,14 +220,15 @@ def epsilon_join(
     Shuffle volume is 9·|queries| + |corpus| instead of
     |queries| + 9·|corpus| — the right trade whenever the query batch is
     the smaller side (the common search shape)."""
-    res = float(radius)
+    r = float(radius)
+    side = cell_side(r)
     left = explode_k_ring(
         left_points.select(
             F.col(left_id).alias("src"),
             F.col(x).cast("double").alias("sx"),
             F.col(y).cast("double").alias("sy"),
         ),
-        res, k=1, x="sx", y="sy", out="_cell",
+        side, k=1, x="sx", y="sy", out="_cell",
     )
     right = with_cell(
         right_points.select(
@@ -232,7 +236,7 @@ def epsilon_join(
             F.col(x).cast("double").alias("tx"),
             F.col(y).cast("double").alias("ty"),
         ),
-        res, x="tx", y="ty", out="_cell",
+        side, x="tx", y="ty", out="_cell",
     )
     d2 = dist2_expr("sx", "sy", "tx", "ty")
     out_cols = [F.col("src"), F.col("dst")]
@@ -240,14 +244,14 @@ def epsilon_join(
         out_cols.append(d2.alias("dist2"))
     return (
         left.hint("shuffle_hash").join(right.hint("shuffle_hash"), "_cell")
-        .where(d2 <= F.lit(res * res))
+        .where(d2 <= F.lit(r * r))
         .select(*out_cols)
     )
 
 
 def hot_cell_salts(
     points: DataFrame,
-    res: float,
+    radius: float,
     partitions: int,
     target_imbalance: float = 1.25,
     max_salt: int = 64,
@@ -261,8 +265,9 @@ def hot_cell_salts(
     src/DistCoverTree.cpp:746-748, inverted per cell); its salt factor is
     ``ceil(n / cap)`` capped at ``max_salt``. Returns (hot_df | None, n_hot).
     The hot set is tiny by construction (≤ partitions / target_imbalance
-    cells can exceed cap), so it broadcasts."""
-    hist = cell_load_histogram(points, res, x=x, y=y)
+    cells can exceed cap), so it broadcasts. Cells are ``cell_side(radius)``
+    wide, the grid ``epsilon_self_join`` buckets on, so the salt keys match."""
+    hist = cell_load_histogram(points, cell_side(radius), x=x, y=y)
     total = points.count()
     if total == 0:
         return None, 0

@@ -3,18 +3,13 @@
 The reference establishes correctness by O(n²) exact comparison
 (``/root/reference/programs/epsilon_graph.cpp:111-163``): build the ε-graph by
 definition, compare per-source sorted adjacency. These oracles reproduce that
-contract — numpy on the driver (primary, independent of Spark) and a
-crossJoin Spark variant for larger fixtures.
+contract in numpy on the driver, independent of Spark.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
-from parallelcovertree_spark.functions.geo import dist2_expr
 
 
 def epsilon_graph_np(pdf: pd.DataFrame, radius: float, include_self: bool = True) -> set[tuple[int, int]]:
@@ -52,12 +47,3 @@ def knn_np(pdf: pd.DataFrame, k: int = 10) -> set[tuple[int, int, int]]:
             out.add((int(ids[i]), rank, dst))
     return out
 
-
-def epsilon_graph_spark(points: DataFrame, radius: float, include_self: bool = True) -> DataFrame:
-    """crossJoin-by-definition ε-graph (test scale only)."""
-    a = points.select(F.col("id").alias("src"), F.col("x").cast("double").alias("sx"), F.col("y").cast("double").alias("sy"))
-    b = points.select(F.col("id").alias("dst"), F.col("x").cast("double").alias("tx"), F.col("y").cast("double").alias("ty"))
-    cond = dist2_expr("sx", "sy", "tx", "ty") <= F.lit(float(radius) ** 2)
-    if not include_self:
-        cond = cond & (F.col("src") != F.col("dst"))
-    return a.crossJoin(b).where(cond).select("src", "dst")

@@ -5,7 +5,8 @@ Spark re-expression of the reference's two-phase construction
 ``src/DistCoverTree.cpp:85-130`` global/local phases):
 
 - **Global phase** — each iteration is ONE Spark job: per-hub farthest-point
-  aggregation (``max_by`` with the reference's tie-break: strict ``>`` ⇒
+  aggregation (``_hub_argmax_np`` partials merged by ``_merge_partials``,
+  with the reference's tie-break: strict ``>`` ⇒
   lowest point id, CoverTree.cpp:117 / the custom MPI argmax op
   DistCoverTree.cpp:175-208), a driver-side hub-chain decision (the reference
   runs this "identically and redundantly on all processors",
@@ -68,24 +69,6 @@ class CoverTreeModel:
     # ~2.3-rows-per-point 8-column vertex table: less Arrow per query call,
     # and the tree side needs no exchange and no sort at query time.
     members: DataFrame | None = None
-
-
-def _collect_farthest(state: DataFrame) -> list:
-    """SURVEY A1: per-hub argmax (partial agg map-side, final agg reduce-side
-    — Catalyst's automatic partial aggregation is the MPI_Allreduce analog).
-    Kept as the DataFrame-native reference op; the build loop computes the
-    same argmax via ``_hub_argmax_np`` partials over executor-resident blocks
-    (see the 'executor-resident global phase' note below)."""
-    best = F.max_by(
-        F.struct(F.col("pid"), F.col("x"), F.col("y"), F.col("dist")),
-        F.struct(F.col("dist"), (-F.col("pid")).alias("neg")),
-    ).alias("far")
-    return (
-        state.where(F.col("hub_vtx") >= 0)
-        .groupBy("hub_vtx")
-        .agg(best, F.count(F.lit(1)).alias("n_active"))
-        .collect()
-    )
 
 
 # --- executor-resident global phase -------------------------------------------

@@ -12,9 +12,7 @@ A from-scratch vectorized implementation of the level-batched cover-tree
 - split processing re-homes points to the new hub of their nearest chain
   member (CoverTree.cpp:215-268);
 - incremental distance maintenance against only the newest chain member,
-  ``<=`` update (CoverTree.cpp:288-302);
-- traversal query with triangle-inequality pruning
-  ``d(q,v) ≤ r + max_radius·base^{-level(v)}`` (CoverTree.cpp:356-372).
+  ``<=`` update (CoverTree.cpp:288-302).
 
 Float discipline: float32 storage, float64 arithmetic (Point.cpp:27-38).
 
@@ -27,9 +25,11 @@ vectorized over all hubs at once).
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 import numpy as np
+
+from parallelcovertree_spark.functions.cells import cell_side
 
 
 @dataclass
@@ -42,22 +42,6 @@ class TreeArrays:
     max_radius: float
     base: float
     xy: np.ndarray        # float32[num_points, 2] — the point set
-    # CSR children adjacency (built lazily)
-    _child_off: np.ndarray | None = field(default=None, repr=False)
-    _child_idx: np.ndarray | None = field(default=None, repr=False)
-
-    def children_csr(self) -> tuple[np.ndarray, np.ndarray]:
-        if self._child_off is None:
-            nv = len(self.pt)
-            p = self.parent
-            mask = p >= 0
-            order = np.argsort(p[mask], kind="stable")
-            idx = np.nonzero(mask)[0][order]
-            counts = np.bincount(p[mask], minlength=nv)
-            off = np.zeros(nv + 1, dtype=np.int64)
-            np.cumsum(counts, out=off[1:])
-            self._child_off, self._child_idx = off, idx
-        return self._child_off, self._child_idx
 
 
 class _VertexStore:
@@ -246,76 +230,6 @@ def build_cover_tree_np(xy: np.ndarray, base: float = 2.0) -> TreeArrays:
     return TreeArrays(pt, lvl, par, max_radius, base, xy)
 
 
-def radii_query_np(
-    tree: TreeArrays,
-    qxy: np.ndarray,
-    radius: float,
-    stop_at: np.ndarray | None = None,
-    stop_radii: np.ndarray | None = None,
-) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
-    """Batched frontier traversal: all queries descend the tree level-by-level
-    as (query, vertex) pair arrays — fully vectorized (no per-query stack).
-
-    Returns (hit_q, hit_pt, route_q, route_vtx): hits are point *indices*
-    within radius; routes are pairs that reached a vertex in ``stop_at``
-    (local-tree roots — the distributed top-tree traversal,
-    DistCoverTree.cpp:1088-1125) and must continue in that subtree.
-
-    ``stop_radii`` (aligned with ``stop_at``): each local tree's ACTUAL
-    covering radius, which is ≤ the level bound ``max_radius·base^-level`` —
-    substituting it prunes routes the generic ball bound cannot (the
-    reference memoizes only the level bound, DistCoverTree.cpp:164-173).
-    """
-    qxy = np.asarray(qxy, dtype=np.float32).astype(np.float64)
-    nq = len(qxy)
-    off, cidx = tree.children_csr()
-    xy64 = tree.xy.astype(np.float64)
-    stop_mask = np.zeros(len(tree.pt), dtype=bool)
-    if stop_at is not None and len(stop_at):
-        stop_mask[stop_at] = True
-
-    q = np.arange(nq, dtype=np.int64)
-    v = np.zeros(nq, dtype=np.int64)
-    hits_q: list[np.ndarray] = []
-    hits_p: list[np.ndarray] = []
-    route_q: list[np.ndarray] = []
-    route_v: list[np.ndarray] = []
-
-    # ball radius bound per vertex: r + max_radius * base^-level
-    bound = radius + tree.max_radius * np.power(tree.base, -1.0 * tree.level)
-    if stop_at is not None and stop_radii is not None and len(stop_at):
-        bound[stop_at] = radius + stop_radii  # exact covering radii
-
-    while len(q):
-        if stop_mask.any():
-            routed = stop_mask[v]
-            if routed.any():
-                route_q.append(q[routed])
-                route_v.append(v[routed])
-                q, v = q[~routed], v[~routed]
-                if not len(q):
-                    break
-        d = np.sqrt(((qxy[q] - xy64[tree.pt[v]]) ** 2).sum(axis=1))
-        hit = d <= radius
-        hits_q.append(q[hit])
-        hits_p.append(tree.pt[v[hit]])
-        # expand children whose covering ball can intersect the query ball
-        nch = off[v + 1] - off[v]
-        keep = nch > 0
-        qk, vk = q[keep], v[keep]
-        nk = nch[keep]
-        childs = cidx[
-            np.repeat(off[vk], nk) + _ragged_arange(nk)
-        ]
-        qrep = np.repeat(qk, nk)
-        dc = np.sqrt(((qxy[qrep] - xy64[tree.pt[childs]]) ** 2).sum(axis=1))
-        ok = dc <= bound[childs]
-        q, v = qrep[ok], childs[ok]
-
-    cat = lambda parts: np.concatenate(parts) if parts else np.empty(0, dtype=np.int64)
-    return cat(hits_q), cat(hits_p), cat(route_q), cat(route_v)
-
-
 def _ragged_arange(counts: np.ndarray) -> np.ndarray:
     """[3,1,2] → [0,1,2,0,0,1] — per-group aranges without Python loops."""
     total = int(counts.sum())
@@ -341,19 +255,17 @@ def grid_radius_pairs(
 
     Dense local radius solver: bucket the points into grid cells, gather each
     query's 3×3 ring via searchsorted over the sorted cell directory, test
-    d² ≤ r² on the gathered candidates. Zero per-query Python. This is the
-    same exact-result contract as the batched tree traversal
-    (``radii_query_np``) at a fraction of its cost for small radii: the
-    traversal pays ~10 frontier iterations of ragged gathers per tree level,
-    the grid pays three numpy passes total (measured 30× on the routed
-    ε-query's per-hub finish at 1M points).
+    d² ≤ r² on the gathered candidates. Zero per-query Python. Same exact
+    result as traversing the hub's local tree, at a fraction of the cost: a
+    batched frontier traversal pays ~10 iterations of ragged gathers per
+    tree level, the grid pays three numpy passes total (measured 30× on the
+    routed ε-query's per-hub finish at 1M points).
 
-    Cell side is radius·(1+1e-9): the margin makes the 1-ring provably cover
-    every within-radius candidate even under worst-case rounding of the
-    bucketing division (a true hit then has quotient gap strictly < 1).
+    Cells are ``cell_side(radius)`` wide, the side every radius path
+    buckets on.
     """
     r = float(radius)
-    s = r * (1.0 + 1e-9)
+    s = cell_side(r)
     if not len(px) or not len(qx):
         z = np.empty(0, dtype=np.int64)
         return z, z

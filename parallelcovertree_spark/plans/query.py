@@ -22,7 +22,7 @@ import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from parallelcovertree_spark.functions.cells import explode_k_ring, with_cell
+from parallelcovertree_spark.functions.cells import cell_side, explode_k_ring, with_cell
 from parallelcovertree_spark.functions.geo import dist2_expr
 from parallelcovertree_spark.plans.covertree import CoverTreeModel
 from parallelcovertree_spark.plans.local_tree import (
@@ -176,7 +176,7 @@ def tree_radius_join(
     # broadcast hash joins in whole-stage codegen (guide §3.1/§2.4 — no
     # shuffle, no Python, no checkpoint):
     # (a) HITS: the stage-1 point set (non-stop top-vertex points, a few
-    #     hundred rows) exploded to its 1-ring at cell size r — each query
+    #     hundred rows) exploded to its 1-ring at ``cell_side(r)`` — each query
     #     probes its own cell, exact d² ≤ r² filter. Identical predicate and
     #     float32-rounded coordinates as the former kernel (the tree stores
     #     float32; the literal table carries those exact values widened).
@@ -191,6 +191,7 @@ def tree_radius_join(
 
     rm = r + 1e-9 * max(1.0, r)
     rm2 = rm * rm
+    side = cell_side(r)
     s1_df = spark.createDataFrame(
         pd.DataFrame({
             "pid": stage1_pids,
@@ -199,9 +200,9 @@ def tree_radius_join(
         }),
         "pid long, px double, py double",
     )
-    ring = explode_k_ring(s1_df, r, k=1, x="px", y="py", out="_cell")
+    ring = explode_k_ring(s1_df, side, k=1, x="px", y="py", out="_cell")
     hits_top = (
-        with_cell(q, r, x="qx", y="qy", out="_cell")
+        with_cell(q, side, x="qx", y="qy", out="_cell")
         .join(F.broadcast(ring), "_cell")
         .where(dist2_expr("qx", "qy", "px", "py") <= F.lit(r * r))
         .select("qid", "pid")
@@ -305,7 +306,7 @@ def tree_radius_join(
         os.environ.get("COVERGRID_ROUTE_BCAST_QUERIES", "50000")
     )
     if getattr(model, "members", None) is not None and q.count() <= bcast_q_threshold:
-        ring_route = explode_k_ring(to_route, r, k=1, x="qx", y="qy", out="_mcell")
+        ring_route = explode_k_ring(to_route, side, k=1, x="qx", y="qy", out="_mcell")
         s1df = spark.createDataFrame(
             pd.DataFrame({"s1_pid": stage1_pids}), "s1_pid long"
         )
@@ -314,7 +315,7 @@ def tree_radius_join(
             .join(F.broadcast(s1df),
                   F.col("point_id") == F.col("s1_pid"), "left_anti")
         )
-        mem = with_cell(mem, r, x="px", y="py", out="_mcell")
+        mem = with_cell(mem, side, x="px", y="py", out="_mcell")
         hits_local = (
             mem.alias("m")
             .join(

@@ -50,9 +50,21 @@ _DEFAULTS = {
 }
 
 
-_IO_CODEC = os.environ.get("COVERGRID_IO_CODEC")
-if _IO_CODEC:
-    _DEFAULTS["spark.io.compression.codec"] = _IO_CODEC
+def _session_conf(
+    shuffle_partitions: int | None = None,
+    extra_conf: dict[str, str] | None = None,
+) -> dict[str, str]:
+    """The conf ``get_spark`` builds: engine defaults, then
+    ``$COVERGRID_IO_CODEC`` (read at each call), then the arguments."""
+    conf = dict(_DEFAULTS)
+    codec = os.environ.get("COVERGRID_IO_CODEC")
+    if codec:
+        conf["spark.io.compression.codec"] = codec
+    if shuffle_partitions is not None:
+        conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
+    if extra_conf:
+        conf.update(extra_conf)
+    return conf
 
 
 def get_spark(
@@ -69,12 +81,7 @@ def get_spark(
         cpus = os.environ.get("SPARK_GRAFT_CPUS")
         master = f"local[{cpus}]" if cpus else "local[*]"
     builder = SparkSession.builder.master(master).appName(app_name)
-    conf = dict(_DEFAULTS)
-    if shuffle_partitions is not None:
-        conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
-    if extra_conf:
-        conf.update(extra_conf)
-    for k, v in conf.items():
+    for k, v in _session_conf(shuffle_partitions, extra_conf).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
