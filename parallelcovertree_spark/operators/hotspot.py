@@ -357,15 +357,15 @@ def nn_distance_stats(
     process of the cell's density n/res² — ~1 random, <1 clustered,
     >1 dispersed.
 
-    Scale shape: the kNN join is the certified adaptive-ring grid plan
-    (never all-pairs); coordinates re-attach through two id-keyed hash
+    Scale shape: the kNN join is the certified block kernel (never
+    all-pairs); coordinates re-attach through two id-keyed hash
     equi-joins; the terminal aggregate is tile-keyed. Distances are
     quantized to BIGINT micro-units before summing (exact, associative);
     mean and CE ratio are fixed expression trees over those integers.
     """
-    from parallelcovertree_spark.operators.knn import knn_join
+    from parallelcovertree_spark.operators.knn import knn_join_block_kernel
 
-    nn = knn_join(pts, k=1, id_col=id_col, x=x, y=y)
+    nn = knn_join_block_kernel(pts, k=1, id_col=id_col, x=x, y=y)
     a = pts.select(
         F.col(id_col).alias("src"),
         F.col(x).cast("double").alias("ax"),

@@ -1,40 +1,39 @@
-"""kNN join (k=10 north star) via grid join + adaptive ring expansion.
+"""Exact kNN join (k=10 north star): grid blocks with a one-cell halo.
 
 The reference's primitive is the radius query; its kNN ground truth is exact
-brute force (``/root/reference/programs/epsilon_graph.cpp:113-118`` pattern,
-``snn_test.py:30-36``). Engine plan here:
+brute force (``programs/epsilon_graph.cpp:113-118`` pattern,
+``snn_test.py:30-36``). The engine has one plan, ``knn_join_block_kernel``:
 
 1. Pick a starting radius r₀ from global density (k / points-per-area).
-2. Grid ε-join at r₀; per-src window top-k over candidates.
-3. A src is RESOLVED iff it has ≥ k candidates and its kth distance ≤ r₀
-   (then the candidate set provably contains its true top-k: every point
-   within r₀ is a candidate).
-4. Unresolved srcs retry at doubled radius; ≤ ``max_rounds`` rounds, then an
-   exact fallback (unresolved set is tiny — isolated points).
+2. Bucket points at ``cells.cell_side(r)`` and ship each to its block of
+   16 × 16 cells plus the adjacent blocks whose one-cell halo it lies in.
+   A numpy kernel per block gathers each core's 3×3 cell ring.
+3. A core is CERTIFIED iff it has ≥ k candidates within r: the ring holds
+   every point within r, so its true top-k is among them.
+4. Uncertified cores retry at doubled radius; ≤ ``max_rounds`` rounds, then
+   an exact straggler fallback (the remaining set is small — isolated
+   points).
 
-Scale behavior: each round is one shuffle hash join over only the unresolved
-srcs; candidate blow-up is bounded by the 9-cell ring at a density-matched
-resolution. Ties broken (dist², dst asc); self excluded (FIXTURES.md F3).
-
-``knn_brute_force`` is the oracle-shaped exact variant (cross join + window) —
-quadratic, test scale only. Four exact plans, one answer:
-``knn_join`` (pure-DataFrame window), ``knn_join_grid_kernel`` (per-cell
-numpy, 9× point replication), ``knn_join_block_kernel`` (per-block numpy,
-~1.13× replication — fastest, the bench path), ``plans.query.tree_knn``
-(cover-tree-routed).
+Ties broken (dist² asc, dst asc); self excluded (FIXTURES.md F3).
+``knn_brute_force`` is the oracle-shaped exact variant (cross join +
+window) — quadratic, test scale only. ``plans.query.tree_knn`` answers the
+same query through the cover tree.
 """
 
 from __future__ import annotations
-
-import os as _os
-import time as _time
 
 import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from parallelcovertree_spark.functions.cells import cell_side
 from parallelcovertree_spark.functions.geo import dist2_expr
 from parallelcovertree_spark.plans.local_tree import _ragged_arange
+
+# a block is _BLOCK_CELLS × _BLOCK_CELLS grid cells; a point ships once to
+# its own block plus to the ≤ 3 adjacent blocks whose 1-cell halo it lies in,
+# expected replication ((B+2)/B)² ≈ 1.27
+_BLOCK_CELLS = 16
 
 
 def _prep(points: DataFrame, id_col: str, x: str, y: str, role: str) -> DataFrame:
@@ -63,421 +62,6 @@ def estimate_radius(points: DataFrame, k: int, x: str = "x", y: str = "y") -> fl
     return max((k * area / n) ** 0.5, 1e-6)
 
 
-def knn_join(
-    points: DataFrame,
-    k: int = 10,
-    id_col: str = "id",
-    x: str = "x",
-    y: str = "y",
-    r0: float | None = None,
-    max_rounds: int = 5,
-) -> DataFrame:
-    """Exact kNN self-join → (src, nbr_rank, dst), rank 1..k."""
-    base = points.select(id_col, x, y).persist()
-    base.count()
-    r = float(r0) if r0 is not None else estimate_radius(base, k + 1, x, y)
-
-    left = _prep(base, id_col, x, y, "l")
-    right = _prep(base, id_col, x, y, "r").persist()
-    resolved_parts: list[DataFrame] = []
-    persisted: list[DataFrame] = []
-    unresolved = left.persist()
-    n_total = base.count()
-    # brute-force stragglers only when the pair count is cheap (one broadcast
-    # scan); otherwise another (proportional-cost) ring round is cheaper
-    brute_pair_budget = 200_000_000
-
-    for round_no in range(max_rounds):
-        # candidates are pre-filtered to ≤ r, so a src with ≥ k candidates is
-        # CERTIFIED: its true top-k all lie within r and the ring holds every
-        # point within r. One shuffle; rank + count share the hash partition.
-        cand = _ring_candidates(unresolved, right, r)
-        wrank = Window.partitionBy("src").orderBy(F.col("dist2").asc(), F.col("dst").asc())
-        wcnt = Window.partitionBy("src")
-        flagged = cand.withColumn("nbr_rank", F.row_number().over(wrank)).withColumn(
-            "cnt", F.count(F.lit(1)).over(wcnt)
-        )
-        # persist only the top-k survivors (k rows/src), not all candidates
-        resolved = flagged.where(
-            (F.col("cnt") >= k) & (F.col("nbr_rank") <= k)
-        ).persist()
-        persisted.append(resolved)
-        resolved_parts.append(resolved.select("src", "nbr_rank", "dst", "dist2"))
-        nxt = unresolved.join(
-            resolved.select("src").distinct(), "src", "left_anti"
-        ).persist()
-        remaining = nxt.count()
-        unresolved.unpersist()
-        unresolved = nxt
-        if remaining == 0:
-            break
-        r *= 2.0
-        if remaining * n_total <= brute_pair_budget or round_no == max_rounds - 1:
-            cand = F.broadcast(unresolved).join(right, F.col("src") != F.col("dst"))
-            cand = cand.withColumn("dist2", dist2_expr("sx", "sy", "tx", "ty"))
-            resolved_parts.append(_topk(cand, k).select("src", "nbr_rank", "dst", "dist2"))
-            break
-
-    out = resolved_parts[0]
-    for p in resolved_parts[1:]:
-        out = out.unionByName(p)
-    # materialize and detach from intermediate caches, then release them —
-    # repeated calls must not accumulate cached candidate sets
-    out = out.select("src", "nbr_rank", "dst").localCheckpoint(eager=True)
-    for df in (base, right, unresolved, *persisted):
-        df.unpersist()
-    return out
-
-
-def _ring_candidates(left: DataFrame, right: DataFrame, r: float) -> DataFrame:
-    """Grid-ring candidate pairs with dist² attached, self excluded."""
-    from parallelcovertree_spark.functions.cells import explode_k_ring, with_cell
-
-    lt = with_cell(left, r, x="sx", y="sy", out="_cell")
-    rt = explode_k_ring(right, r, k=1, x="tx", y="ty", out="_cell")
-    d2 = dist2_expr("sx", "sy", "tx", "ty")
-    return (
-        lt.join(rt.hint("shuffle_hash"), "_cell")
-        .where(F.col("src") != F.col("dst"))
-        .select("src", "dst", d2.alias("dist2"))
-        # prune beyond-radius candidates before the per-src window sort:
-        # anything > r can never certify, and all certified neighbors are ≤ r
-        .where(F.col("dist2") <= F.lit(r * r))
-    )
-
-
-def knn_join_grid_kernel(
-    points: DataFrame,
-    k: int = 10,
-    id_col: str = "id",
-    x: str = "x",
-    y: str = "y",
-    r0: float | None = None,
-    cell_factor: float = 2.0,
-    max_rounds: int = 5,
-) -> DataFrame:
-    """Exact kNN via per-cell numpy kernels (the shuffle-lean plan).
-
-    The pure-DataFrame ``knn_join`` shuffles every candidate PAIR (~3-10× the
-    point count) into a per-src window sort. This variant shuffles each POINT
-    at most 9× (the ring explode) and solves each cell's cores against its
-    ring with one vectorized distance matrix inside ``mapInPandas`` — no pair
-    materialization, no window sort. Same certification rule: a core with ≥ k
-    in-radius neighbors is exact (its cell ring provably contains every point
-    within r); stragglers retry at doubled radius, tiny remainders fall back
-    to the broadcast window plan.
-
-    This is the reference's per-hub local kernel idea (DistCoverTree.cpp
-    build_local_trees + local queries) applied to the grid: route by spatial
-    key, finish with a dense local solver.
-    """
-    import pandas as pd
-    import pyarrow as pa
-
-    from parallelcovertree_spark.functions.cells import cell_ix
-
-    base = points.select(
-        F.col(id_col).cast("long").alias("pid"),
-        F.col(x).cast("double").alias("px"),
-        F.col(y).cast("double").alias("py"),
-    ).persist()
-    n_total = base.count()
-    r = float(r0) if r0 is not None else estimate_radius(base, k + 1, "px", "py")
-    brute_pair_budget = 200_000_000
-
-    spark = base.sparkSession
-    parts = max(int(spark.conf.get("spark.sql.shuffle.partitions")), 16)
-    # packed return leg (mapInArrow): ONE row per core (src, topk list built
-    # as a zero-copy pa.ListArray) instead of k+1 pair rows — ~10x fewer rows
-    # and no per-row objects over the Arrow pipe; posexplode back JVM-side
-    out_schema = "src long, topk array<long>"
-    results: list[DataFrame] = []
-    unresolved_ids: DataFrame | None = None  # None = all cores unresolved
-
-    for round_no in range(max_rounds):
-        s = cell_factor * r
-        ix, iy = cell_ix("px", s), cell_ix("py", s)
-        offs = F.array(*[F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
-                         for dx in (-1, 0, 1) for dy in (-1, 0, 1)])
-        ex = base.select(
-            "pid", "px", "py", ix.alias("_ix"), iy.alias("_iy"),
-            F.explode(offs).alias("_o"),
-        ).select(
-            "pid", "px", "py",
-            ((F.col("_ix") + F.col("_o.dx")) * F.lit(1 << 21)
-             + (F.col("_iy") + F.col("_o.dy"))).alias("cell"),
-            ((F.col("_o.dx") == 0) & (F.col("_o.dy") == 0)).alias("own"),
-        )
-        if unresolved_ids is None:
-            ex = ex.withColumn("core", F.col("own"))
-        else:
-            flag = unresolved_ids.withColumn("_u", F.lit(True))
-            ex = ex.join(flag, ex.pid == flag.src, "left").select(
-                "pid", "px", "py", "cell",
-                (F.col("own") & F.coalesce(F.col("_u"), F.lit(False))).alias("core"),
-            )
-        rr = r  # capture by value
-
-        def kernel(batches):
-            carry: pd.DataFrame | None = None
-
-            def solve(pdf: pd.DataFrame, last: bool):
-                nonlocal carry
-                if carry is not None:
-                    pdf = pd.concat([carry, pdf], ignore_index=True)
-                    carry = None
-                cells = pdf["cell"].to_numpy(np.int64)
-                if not last:
-                    # a cell may straddle arrow batches; hold back its rows
-                    tail = cells == cells[-1]
-                    if tail.all():
-                        carry = pdf
-                        return None
-                    carry = pdf.iloc[np.nonzero(tail)[0]]
-                    pdf = pdf.iloc[np.nonzero(~tail)[0]]
-                    cells = cells[~tail]
-                ids = pdf["pid"].to_numpy(np.int64)
-                xy = np.stack([pdf["px"].to_numpy(np.float64),
-                               pdf["py"].to_numpy(np.float64)], axis=1)
-                core = pdf["core"].to_numpy(bool)
-                bounds = np.nonzero(np.diff(cells))[0] + 1
-                starts = np.concatenate([[0], bounds])
-                ends = np.concatenate([bounds, [len(cells)]])
-                out_src, out_dst, fail_src = [], [], []
-                r2 = rr * rr
-                for a, b in zip(starts, ends):
-                    cm = core[a:b]
-                    if not cm.any():
-                        continue
-                    if (b - a) <= k:
-                        fail_src.append(ids[a:b][cm])
-                        continue
-                    cxy = xy[a:b][cm]
-                    cid = ids[a:b][cm]
-                    axy = xy[a:b]
-                    aid = ids[a:b]
-                    d2 = ((cxy[:, None, :] - axy[None, :, :]) ** 2).sum(axis=2)
-                    d2[cid[:, None] == aid[None, :]] = np.inf  # self
-                    within = d2 <= r2
-                    ok = within.sum(axis=1) >= k
-                    if not ok.all():
-                        fail_src.append(cid[~ok])
-                    if not ok.any():
-                        continue
-                    # fully vectorized, tie-exact top-k with (d2 asc, dst asc):
-                    # every row shares the same candidate ids, so order the
-                    # COLUMNS by dst once, then a stable per-row argsort on d2
-                    # yields the exact (d2, dst) lexicographic order — no
-                    # per-row python, and boundary ties resolve to lowest dst
-                    # (argpartition alone mis-picks when the kth distance ties)
-                    dd = np.where(within[ok], d2[ok], np.inf)
-                    ordc = np.argsort(aid, kind="stable")
-                    dd = dd[:, ordc]
-                    sel = np.argsort(dd, axis=1, kind="stable")[:, :k]
-                    out_src.append(cid[ok])
-                    out_dst.append(aid[ordc][sel].ravel())
-                src_ok = np.concatenate(out_src) if out_src else np.empty(0, np.int64)
-                dst_flat = np.concatenate(out_dst) if out_dst else np.empty(0, np.int64)
-                fs = np.concatenate(fail_src) if fail_src else np.empty(0, np.int64)
-                src_arr = np.concatenate([src_ok, fs])
-                if not len(src_arr):
-                    return None
-                # zero-copy packed lists: offsets step k for resolved rows,
-                # then repeat for unresolved ([] = straggler marker) — no
-                # per-row python objects anywhere on the return leg
-                lens = np.zeros(len(src_arr), dtype=np.int32)
-                lens[: len(src_ok)] = k
-                offsets = np.zeros(len(src_arr) + 1, dtype=np.int32)
-                np.cumsum(lens, out=offsets[1:])
-                topk = pa.ListArray.from_arrays(
-                    pa.array(offsets), pa.array(dst_flat, pa.int64())
-                )
-                return pa.RecordBatch.from_arrays(
-                    [pa.array(src_arr, pa.int64()), topk], ["src", "topk"]
-                )
-
-            prev = None
-            for rb in batches:
-                pdf = rb.to_pandas()
-                if prev is not None:
-                    out = solve(prev, last=False)
-                    if out is not None and len(out):
-                        yield out
-                prev = pdf
-            if prev is not None:
-                out = solve(prev, last=True)
-                if out is not None and len(out):
-                    yield out
-
-        solved = (
-            ex.repartition(parts, "cell")
-            .sortWithinPartitions("cell")
-            .mapInArrow(kernel, out_schema)
-            .localCheckpoint(eager=True)
-        )
-        results.append(
-            solved.where(F.size("topk") > 0)
-            .select("src", F.posexplode("topk").alias("pos", "dst"))
-            .select("src", (F.col("pos") + 1).cast("int").alias("nbr_rank"), "dst")
-        )
-        prev_unresolved = unresolved_ids
-        unresolved_ids = solved.where(F.size("topk") == 0).select("src").persist()
-        remaining = unresolved_ids.count()
-        if prev_unresolved is not None:
-            prev_unresolved.unpersist()
-        if remaining == 0:
-            break
-        r *= 2.0
-        if remaining * n_total <= brute_pair_budget or round_no == max_rounds - 1:
-            strag = base.join(F.broadcast(unresolved_ids), base.pid == F.col("src")).select(
-                F.col("pid").alias("q"), F.col("px").alias("qx"), F.col("py").alias("qy")
-            )
-            cand = F.broadcast(strag).join(base, F.col("q") != F.col("pid"))
-            d2 = ((F.col("qx") - F.col("px")) ** 2 + (F.col("qy") - F.col("py")) ** 2)
-            w = Window.partitionBy("q").orderBy(d2.asc(), F.col("pid").asc())
-            results.append(
-                cand.withColumn("nbr_rank", F.row_number().over(w))
-                .where(F.col("nbr_rank") <= k)
-                .select(F.col("q").alias("src"), "nbr_rank", F.col("pid").alias("dst"))
-                .localCheckpoint(eager=True)
-            )
-            break
-
-    out = results[0]
-    for p in results[1:]:
-        out = out.unionByName(p)
-    base.unpersist()
-    if unresolved_ids is not None:
-        unresolved_ids.unpersist()
-    return out
-
-
-def knn_join_jvm_arrays(
-    points: DataFrame,
-    k: int = 10,
-    id_col: str = "id",
-    x: str = "x",
-    y: str = "y",
-    r0: float | None = None,
-    cell_factor: float = 2.0,
-    max_rounds: int = 5,
-) -> DataFrame:
-    """Exact kNN with the per-cell solve in Catalyst higher-order functions
-    (collect each cell's ring once; per core ``slice(array_sort(filter(
-    transform(...))), 1, k)`` — lexicographic struct sort gives the exact
-    (d² asc, dst asc) tie-break).
-
-    MEASURED VERDICT (BENCH/BASELINE.md box): ~6x slower than the numpy
-    kernel (39.6s vs 6.5s at 1M points, local[32]) — Spark evaluates
-    higher-order functions interpreted, outside whole-stage codegen, so the
-    "pure JVM" framing buys nothing here. Kept as the no-Python-runtime
-    variant (environments where Python workers are unavailable) and as
-    documentation of the trade; ``knn_join_grid_kernel`` is the default.
-
-    Also caveat: a pathologically hot cell materializes one large array in
-    collect_list (no AQE split inside an agg) — the histogram/salting
-    machinery exists to detect that regime.
-    """
-    from parallelcovertree_spark.functions.cells import cell_ix
-
-    base = points.select(
-        F.col(id_col).cast("long").alias("pid"),
-        F.col(x).cast("double").alias("px"),
-        F.col(y).cast("double").alias("py"),
-    ).persist()
-    n_total = base.count()
-    r = float(r0) if r0 is not None else estimate_radius(base, k + 1, "px", "py")
-    brute_pair_budget = 200_000_000
-    results: list[DataFrame] = []
-    unresolved: DataFrame | None = None  # None = all
-
-    for round_no in range(max_rounds):
-        s = cell_factor * r
-        ix, iy = cell_ix("px", s), cell_ix("py", s)
-        offs = F.array(*[F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
-                         for dx in (-1, 0, 1) for dy in (-1, 0, 1)])
-        ex = base.select(
-            "pid", "px", "py", ix.alias("_ix"), iy.alias("_iy"), F.explode(offs).alias("_o")
-        ).select(
-            "pid", "px", "py",
-            ((F.col("_ix") + F.col("_o.dx")) * F.lit(1 << 21)
-             + (F.col("_iy") + F.col("_o.dy"))).alias("cell"),
-            ((F.col("_o.dx") == 0) & (F.col("_o.dy") == 0)).alias("own"),
-        )
-        if unresolved is not None:
-            flag = unresolved.withColumn("_u", F.lit(True))
-            ex = ex.join(flag, ex.pid == flag.src, "left").select(
-                "pid", "px", "py", "cell",
-                (F.col("own") & F.coalesce(F.col("_u"), F.lit(False))).alias("own"),
-            )
-        # one array per cell: ring members; cores = rows with own=true
-        cells = ex.groupBy("cell").agg(
-            F.collect_list(F.struct("pid", "px", "py")).alias("ring"),
-            F.collect_list(F.when(F.col("own"), F.struct("pid", "px", "py"))).alias("cores"),
-        ).where(F.size("cores") > 0)
-
-        r2 = F.lit(r * r)
-
-        def topk_for(c):
-            cand = F.filter(
-                F.transform(
-                    F.col("ring"),
-                    lambda p: F.struct(
-                        ((p.px - c.px) * (p.px - c.px)
-                         + (p.py - c.py) * (p.py - c.py)).alias("d2"),
-                        p.pid.alias("dst"),
-                    ),
-                ),
-                lambda e: (e.d2 <= r2) & (e.dst != c.pid),
-            )
-            return F.struct(
-                c.pid.alias("src"),
-                F.when(F.size(cand) >= k,
-                       F.slice(F.array_sort(cand), 1, k)).alias("topk"),
-            )
-
-        solved = (
-            cells.select(F.explode(F.transform(F.col("cores"), topk_for)).alias("s"))
-            .select(F.col("s.src").alias("src"), F.col("s.topk").alias("topk"))
-            .localCheckpoint(eager=True)
-        )
-        results.append(
-            solved.where(F.col("topk").isNotNull()).select(
-                "src", F.posexplode("topk").alias("pos", "e")
-            ).select("src", (F.col("pos") + 1).alias("nbr_rank"), F.col("e.dst").alias("dst"))
-        )
-        prev = unresolved
-        unresolved = solved.where(F.col("topk").isNull()).select("src").persist()
-        remaining = unresolved.count()
-        if prev is not None:
-            prev.unpersist()
-        if remaining == 0:
-            break
-        r *= 2.0
-        if remaining * n_total <= brute_pair_budget or round_no == max_rounds - 1:
-            strag = base.join(F.broadcast(unresolved), base.pid == F.col("src")).select(
-                F.col("pid").alias("q"), F.col("px").alias("qx"), F.col("py").alias("qy")
-            )
-            cand = F.broadcast(strag).join(base, F.col("q") != F.col("pid"))
-            d2 = ((F.col("qx") - F.col("px")) ** 2 + (F.col("qy") - F.col("py")) ** 2)
-            w = Window.partitionBy("q").orderBy(d2.asc(), F.col("pid").asc())
-            results.append(
-                cand.withColumn("nbr_rank", F.row_number().over(w))
-                .where(F.col("nbr_rank") <= k)
-                .select(F.col("q").alias("src"), "nbr_rank", F.col("pid").alias("dst"))
-                .localCheckpoint(eager=True)
-            )
-            break
-
-    out = results[0]
-    for p in results[1:]:
-        out = out.unionByName(p)
-    base.unpersist()
-    if unresolved is not None:
-        unresolved.unpersist()
-    return out
-
-
 def knn_brute_force(
     points: DataFrame,
     k: int = 10,
@@ -503,26 +87,23 @@ def knn_join_block_kernel(
     x: str = "x",
     y: str = "y",
     r0: float | None = None,
-    cell_factor: float = 1.0,
-    block_cells: int = 16,
     max_rounds: int = 5,
     queries: DataFrame | None = None,
     query_id_col: str = "id",
     exclude_same_id: bool = True,
 ) -> DataFrame:
-    """Exact kNN via per-BLOCK numpy kernels — the pipe-lean evolution of
-    ``knn_join_grid_kernel``.
+    """Exact kNN → (src, nbr_rank, dst), rank 1..k, via per-BLOCK numpy
+    kernels.
 
-    The per-cell kernel ships every point 9× (its cell's full ring). Here
-    the unit of work is a BLOCK of ``block_cells`` × ``block_cells`` grid
-    cells: a point ships once to its own block plus to adjacent blocks only
-    when it sits in the block's 1-cell border — expected replication
-    ``((B+2)/B)²`` ≈ 1.13 at the default B=16 instead of 9. Inside a task the kernel
-    resolves each core cell's 3×3 ring by searchsorted lookups over the
-    block's cell-sorted rows (the halo guarantees the ring is complete), so
-    certification semantics are identical to the cell kernel — and to the
-    brute-force oracle. Same straggler protocol (empty topk marker rows,
-    doubled radius, broadcast fallback).
+    The unit of work is a BLOCK of 16 × 16 grid cells at side
+    ``cell_side(r)``: a point ships once to its own block plus to adjacent
+    blocks only when it sits in the block's 1-cell border (expected
+    replication ≈ 1.27). Inside a task the kernel resolves each core cell's
+    3×3 ring by searchsorted lookups over the block's cell-sorted rows (the
+    halo guarantees the ring is complete), so a core with ≥ k candidates
+    within r has its exact top-k — the brute-force oracle's answer.
+    Uncertified cores come back as empty-topk marker rows and retry at
+    doubled radius; the last few fall back to an exact straggler scan.
 
     ``queries`` switches to the two-table form (queries × corpus): query
     rows ship to their own block only (the corpus halo brings their ring)
@@ -532,15 +113,13 @@ def knn_join_block_kernel(
     spaces may collide — then a corpus point with the query's id is a valid
     neighbor. Self-join mode always excludes the point itself.
     """
-    import pandas as pd
     import pyarrow as pa
 
     M = 1 << 21
     OFF = 1 << 20
+    B = _BLOCK_CELLS
     NBR = np.array([dx * M + dy for dx in (-1, 0, 1) for dy in (-1, 0, 1)], dtype=np.int64)
 
-    _dbg = bool(_os.environ.get("COVERGRID_KNN_DEBUG"))
-    _t0 = _time.time()
     base = points.select(
         F.col(id_col).cast("long").alias("pid"),
         F.col(x).cast("double").alias("px"),
@@ -568,8 +147,6 @@ def knn_join_block_kernel(
         n_est = max(n_total, 1)
         area = max((float(row.x1) - float(row.x0)) * (float(row.y1) - float(row.y0)), 1e-12)
         r = max(((k + 1) * area / n_est) ** 0.5, 1e-6)
-    if _dbg:
-        print(f"[knn-block] prep+radius={_time.time() - _t0:.2f}s", flush=True)
     # self-join always masks the point's own row; two-table masks colliding
     # ids only when exclude_same_id (the default = "queries ⊆ corpus")
     mask_same = qbase is None or exclude_same_id
@@ -577,12 +154,11 @@ def knn_join_block_kernel(
     spark = base.sparkSession
     parts = max(int(spark.conf.get("spark.sql.shuffle.partitions")), 16)
     out_schema = "src long, topk array<long>"
-    B = int(block_cells)
     results: list[DataFrame] = []
     unresolved_ids: DataFrame | None = None
 
     for round_no in range(max_rounds):
-        s = cell_factor * r
+        s = cell_side(r)
         ix = F.floor(F.col("px") / F.lit(s)).cast("long")
         iy = F.floor(F.col("py") / F.lit(s)).cast("long")
         # NOTE: no "cell" column and no within-partition sort — the kernel
@@ -593,61 +169,33 @@ def knn_join_block_kernel(
         cands = base.select(
             "pid", "px", "py",
             F.pmod(ix, F.lit(B)).alias("mx"), F.pmod(iy, F.lit(B)).alias("my"),
-            ((ix - F.pmod(ix, F.lit(B))) / B).cast("long").alias("bx"),
-            ((iy - F.pmod(iy, F.lit(B))) / B).cast("long").alias("by"),
         )
-        if B >= 2:
-            # a point reaches at most 4 blocks (own + the ≤3 adjacent ones
-            # its border position demands): build exactly those entries and
-            # drop the nulls, instead of generating the full 9-offset ring
-            # and filtering 7/9 of it away (9n → ≤4n generated rows)
-            sx = (F.when(F.col("mx") == 0, -1)
-                  .when(F.col("mx") == B - 1, 1).otherwise(0)).cast("int")
-            sy = (F.when(F.col("my") == 0, -1)
-                  .when(F.col("my") == B - 1, 1).otherwise(0)).cast("int")
-            zero = F.lit(0).cast("int")
-            ents = F.array(
-                F.struct(zero.alias("dx"), zero.alias("dy")),
-                F.when(sx != 0, F.struct(sx.alias("dx"), zero.alias("dy"))),
-                F.when(sy != 0, F.struct(zero.alias("dx"), sy.alias("dy"))),
-                F.when((sx != 0) & (sy != 0),
-                       F.struct(sx.alias("dx"), sy.alias("dy"))),
+        # a point reaches at most 4 blocks (own + the ≤3 adjacent ones its
+        # border position demands): build exactly those entries and drop the
+        # nulls, instead of generating the full 9-offset ring and filtering
+        # 7/9 of it away (9n → ≤4n generated rows)
+        sx = (F.when(F.col("mx") == 0, -1)
+              .when(F.col("mx") == B - 1, 1).otherwise(0)).cast("int")
+        sy = (F.when(F.col("my") == 0, -1)
+              .when(F.col("my") == B - 1, 1).otherwise(0)).cast("int")
+        zero = F.lit(0).cast("int")
+        ents = F.array(
+            F.struct(zero.alias("dx"), zero.alias("dy")),
+            F.when(sx != 0, F.struct(sx.alias("dx"), zero.alias("dy"))),
+            F.when(sy != 0, F.struct(zero.alias("dx"), sy.alias("dy"))),
+            F.when((sx != 0) & (sy != 0),
+                   F.struct(sx.alias("dx"), sy.alias("dy"))),
+        )
+        ex = (
+            cands.select("pid", "px", "py", F.explode(ents).alias("_o"))
+            .where(F.col("_o").isNotNull())
+            .select(
+                "pid", "px", "py",
+                ((F.col("_o.dx") + 1) * 3 + (F.col("_o.dy") + 1))
+                .cast("tinyint").alias("off"),
+                ((F.col("_o.dx") == 0) & (F.col("_o.dy") == 0)).alias("own"),
             )
-            ex = (
-                cands.select("pid", "px", "py",
-                             F.explode(ents).alias("_o"))
-                .where(F.col("_o").isNotNull())
-                .select(
-                    "pid", "px", "py",
-                    ((F.col("_o.dx") + 1) * 3 + (F.col("_o.dy") + 1))
-                    .cast("tinyint").alias("off"),
-                    ((F.col("_o.dx") == 0) & (F.col("_o.dy") == 0)).alias("own"),
-                )
-            )
-        else:
-            offs = F.array(*[F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
-                             for dx in (-1, 0, 1) for dy in (-1, 0, 1)])
-            xok = (
-                (F.col("_o.dx") == 0)
-                | ((F.col("_o.dx") == -1) & (F.col("mx") == 0))
-                | ((F.col("_o.dx") == 1) & (F.col("mx") == B - 1))
-            )
-            yok = (
-                (F.col("_o.dy") == 0)
-                | ((F.col("_o.dy") == -1) & (F.col("my") == 0))
-                | ((F.col("_o.dy") == 1) & (F.col("my") == B - 1))
-            )
-            ex = (
-                cands.select("pid", "px", "py", "mx", "my",
-                             F.explode(offs).alias("_o"))
-                .where(xok & yok)
-                .select(
-                    "pid", "px", "py",
-                    ((F.col("_o.dx") + 1) * 3 + (F.col("_o.dy") + 1))
-                    .cast("tinyint").alias("off"),
-                    ((F.col("_o.dx") == 0) & (F.col("_o.dy") == 0)).alias("own"),
-                )
-            )
+        )
         if qbase is not None:
             # two-table: corpus rows are candidates only; query rows go to
             # their own block, are cores only
@@ -784,6 +332,8 @@ def knn_join_block_kernel(
                 src_arr = np.concatenate([src_ok, fs])
                 if not len(src_arr):
                     return None
+                # zero-copy packed lists: offsets step k for certified rows,
+                # then repeat for uncertified ([] = straggler marker)
                 lens = np.zeros(len(src_arr), dtype=np.int32)
                 lens[: len(src_ok)] = k
                 offsets = np.zeros(len(src_arr) + 1, dtype=np.int32)
@@ -820,21 +370,17 @@ def knn_join_block_kernel(
         # multiple) that the kernel reproduces bit-for-bit in numpy, so no
         # block id is ever shipped: the shuffle and Arrow legs carry a
         # 1-byte offset code where an 8-byte block id used to ride
-        _ixe = F.floor(F.col("px") / F.lit(s)).cast("long")
-        _iye = F.floor(F.col("py") / F.lit(s)).cast("long")
-        _bxe = ((_ixe - F.pmod(_ixe, F.lit(B))) / B).cast("long")
-        _bye = ((_iye - F.pmod(_iye, F.lit(B))) / B).cast("long")
+        _bxe = ((ix - F.pmod(ix, F.lit(B))) / B).cast("long")
+        _bye = ((iy - F.pmod(iy, F.lit(B))) / B).cast("long")
         _offl = F.col("off").cast("long")
         _dxe = ((_offl - F.pmod(_offl, F.lit(3))) / 3).cast("long") - 1
         _dye = F.pmod(_offl, F.lit(3)) - 1
         _blk_expr = (_bxe + _dxe + OFF) * M + (_bye + _dye + OFF)
-        _t1 = _time.time()
         solved = (
             ex.repartition(parts, _blk_expr)
             .mapInArrow(kernel, out_schema)
             .localCheckpoint(eager=True)
         )
-        _t2 = _time.time()
         results.append(
             solved.where(F.size("topk") > 0)
             .select("src", F.posexplode("topk").alias("pos", "dst"))
@@ -843,19 +389,12 @@ def knn_join_block_kernel(
         prev_unresolved = unresolved_ids
         unresolved_ids = solved.where(F.size("topk") == 0).select("src").persist()
         remaining = unresolved_ids.count()
-        if _dbg:
-            print(
-                f"[knn-block] round={round_no} r={r:.5f} kernel={_t2 - _t1:.2f}s "
-                f"resolve={_time.time() - _t2:.2f}s remaining={remaining}",
-                flush=True,
-            )
         if prev_unresolved is not None:
             prev_unresolved.unpersist()
         if remaining == 0:
             break
         r *= 2.0
         if remaining * n_total <= brute_pair_budget or round_no == max_rounds - 1:
-            _t3 = _time.time()
             qsrc = qbase if qbase is not None else base
             if remaining * n_total <= 20_000_000:
                 # tiny pair count: one whole-stage-codegen scan of the cached
@@ -894,12 +433,6 @@ def knn_join_block_kernel(
                             F.col("pid").alias("dst"))
                     .localCheckpoint(eager=True)
                 )
-                if _dbg:
-                    print(
-                        f"[knn-block] straggler remaining={remaining} "
-                        f"broadcast-window {_time.time() - _t3:.2f}s",
-                        flush=True,
-                    )
                 break
             strag_rows = qsrc.join(
                 F.broadcast(unresolved_ids), qsrc.pid == F.col("src")
@@ -961,12 +494,6 @@ def knn_join_block_kernel(
                 .select("src", "nbr_rank", "dst")
                 .localCheckpoint(eager=True)
             )
-            if _dbg:
-                print(
-                    f"[knn-block] straggler remaining={remaining} "
-                    f"partial-topk {_time.time() - _t3:.2f}s",
-                    flush=True,
-                )
             break
 
     out = results[0]

@@ -791,9 +791,9 @@ def build_cover_tree(
     # gridded at the hub's ball scale, cells Morton-packed into ≤max_pts
     # groups on the driver, each group registered as a child vertex of the
     # hub and built as its own local tree. Query routing stays EXACT because
-    # routed traversal bounds use each local root's ACTUAL covering radius
-    # (plans/query.py _hub_radii), not the level ball — same discipline as
-    # the ε-join's hot-cell-only salting.
+    # it uses each local root's member bounding box (plans/query.py
+    # _hub_boxes), not the level ball — same discipline as the ε-join's
+    # hot-cell-only salting.
     #
     # Driver path: the histogram/remap runs in numpy over the resident state
     # BEFORE the flush (no Spark job; the flushed parquet already carries the

@@ -4,11 +4,10 @@ The reference's distributed query replicates ALL points to every rank
 (DistCoverTree.cpp:679-724) — its stated scalability weak spot. We do what its
 ``idea.txt`` proposes instead: broadcast only the (small) top tree, traverse it
 per query batch to find (a) direct hits and (b) the local-tree roots whose
-covering balls intersect the query ball (DistCoverTree.cpp:1088-1125
-``local_radii_query`` semantics), then SHUFFLE each query to its target hubs
-and finish inside a ``cogroup(...).applyInPandas`` against the co-located
-local-tree partition — the Spark analog of the reference's batched
-query-routing design note (idea.txt:1-21, SURVEY J6).
+member boxes intersect the query ball (DistCoverTree.cpp:1088-1125
+``local_radii_query`` semantics), then route each query to its target hubs
+and finish against the hubs' ``members`` rows — the Spark analog of the
+reference's batched query-routing design note (idea.txt:1-21, SURVEY J6).
 
 Result sets are unioned + dedup'd (the reference's ``allgather_distinct``,
 DistCoverTree.cpp:657-677).
@@ -43,7 +42,7 @@ def _top_tree_arrays(model: CoverTreeModel) -> tuple[TreeArrays, np.ndarray, np.
     O(dups) rows onto the driver. Leaf hits are answered distributed instead
     (grid ε-join in ``tree_radius_join``).
 
-    Memoized on the model (like ``_hub_radii``): a kNN radius search runs up
+    Memoized on the model (like ``_hub_boxes``): a kNN radius search runs up
     to 8 expansion rounds against the same immutable model — one collect,
     not one per round."""
     cached = getattr(model, "_top_tree_cache", None)
@@ -80,38 +79,30 @@ def _top_tree_arrays(model: CoverTreeModel) -> tuple[TreeArrays, np.ndarray, np.
     return cached
 
 
-def _hub_radii(model: CoverTreeModel, vid_of_stop: np.ndarray):
-    """Actual covering radius + member bounding box per local-tree root
-    (aligned with ``model.local_roots``) — each local build records max dist
-    from its hub point; every member appears as a local vertex, so the
-    min/max of (px, py) is the hub's exact member bounding box. The radius
-    is ≤ the generic level ball bound, so routing with it is exact AND
-    strictly tighter; the box is tighter still (hub balls overlap heavily at
+def _hub_boxes(model: CoverTreeModel, vid_of_stop: np.ndarray):
+    """Member bounding box per local-tree root (aligned with
+    ``model.local_roots``): the min/max of the hub's ``members`` (px, py).
+    The box is tighter than any covering ball (hub balls overlap heavily at
     small query radii — measured 4.4 routed hubs/query at 1M points where
     ~1 hub actually holds hits). Collected once per model (n_hubs rows, one
-    agg job), memoized. Returns (radii, x0, x1, y0, y1) or None."""
-    if model.local_trees is None or not len(vid_of_stop):
-        return None
-    cached = getattr(model, "_hub_radii_cache", None)
+    agg job), memoized. Returns (x0, x1, y0, y1)."""
+    cached = getattr(model, "_hub_boxes_cache", None)
     if cached is None:
         rows = (
-            model.local_trees.groupBy("hub_id")
+            model.members.groupBy("hub_id")
             .agg(
-                F.max("lmax_radius").alias("lmax"),
                 F.min("px").alias("x0"), F.max("px").alias("x1"),
                 F.min("py").alias("y0"), F.max("py").alias("y1"),
             )
             .collect()
         )
         cached = {
-            int(r.hub_id): (float(r.lmax), float(r.x0), float(r.x1),
-                            float(r.y0), float(r.y1))
+            int(r.hub_id): (float(r.x0), float(r.x1), float(r.y0), float(r.y1))
             for r in rows
         }
-        object.__setattr__(model, "_hub_radii_cache", cached)
-    vals = [cached[int(v)] for v in vid_of_stop]
-    arr = np.array(vals, dtype=np.float64)
-    return arr[:, 0], arr[:, 1], arr[:, 2], arr[:, 3], arr[:, 4]
+        object.__setattr__(model, "_hub_boxes_cache", cached)
+    arr = np.array([cached[int(v)] for v in vid_of_stop], dtype=np.float64)
+    return arr[:, 0], arr[:, 1], arr[:, 2], arr[:, 3]
 
 
 def tree_radius_join(
@@ -135,7 +126,6 @@ def tree_radius_join(
     spark = queries.sparkSession
     tree, upid, stop = _top_tree_arrays(model)
     vid_of_stop = np.array(model.local_roots, dtype=np.int64)
-    stop_meta = _hub_radii(model, vid_of_stop)
     # global pids tested by stage 1 = points of NON-stop top vertices (stop
     # vertices are routed, their point is tested inside the local tree)
     nonstop = np.ones(len(tree.pt), dtype=bool)
@@ -143,24 +133,6 @@ def tree_radius_join(
         nonstop[stop] = False
     s1idx = np.unique(tree.pt[nonstop])  # point indices, unique
     stage1_pids = upid[s1idx]            # sorted (pt indices sort like pids)
-    # per-hub member bounding boxes (stop-aligned): a hub is routed iff the
-    # query ball intersects its member box — a member within r of q lies in
-    # its hub's box, so dist(q, box) ≤ dist(q, member) ≤ r and no true hit
-    # can be pruned. The box criterion equals the former traversal∩box
-    # filter's accept set on every hub that matters (box ⊆ covering ball, so
-    # a box hit implies every ancestor ball bound holds); measured 4.4 → 1.9
-    # routed hubs/query at 1M points.
-    hub_boxes = None
-    if stop_meta is not None and len(stop):
-        hub_boxes = (stop_meta[1], stop_meta[2], stop_meta[3], stop_meta[4])
-    # radius-independent payload → memoized broadcast: tree_knn's expansion
-    # rounds reuse one executor-side copy instead of re-shipping the model
-    bc = getattr(model, "_query_bc_cache", None)
-    if bc is None:
-        bc = spark.sparkContext.broadcast(
-            (tree, upid, stage1_pids, s1idx, hub_boxes, vid_of_stop)
-        )
-        object.__setattr__(model, "_query_bc_cache", bc)
     r = float(radius)
 
     q = queries.select(
@@ -208,9 +180,15 @@ def tree_radius_join(
         .select("qid", "pid")
     )
 
+    # per-hub member bounding boxes (stop-aligned): a hub is routed iff the
+    # query ball intersects its member box — a member within r of q lies in
+    # its hub's box, so dist(q, box) ≤ dist(q, member) ≤ r and no true hit
+    # can be pruned; measured 4.4 → 1.9 routed hubs/query at 1M points
+    # against covering-ball routing. A model has ``members`` exactly when it
+    # has local trees.
     to_route = None
-    if hub_boxes is not None and len(vid_of_stop):
-        x0, x1, y0, y1 = hub_boxes
+    if model.members is not None:
+        x0, x1, y0, y1 = _hub_boxes(model, vid_of_stop)
         g = max(float(np.max(x1 - x0)), float(np.max(y1 - y0)),
                 2.0 * rm, 1e-12) * (1.0 + 1e-12)
         bcx0 = np.floor((x0 - rm) / g).astype(np.int64)
@@ -282,7 +260,7 @@ def tree_radius_join(
         )
         hits_top = hits_top.unionByName(hits_leaf)
 
-    if model.local_trees is None or to_route is None:
+    if model.members is None:
         return hits_top.select(F.col("qid").alias("src"), F.col("pid").alias("dst"))
 
     # --- stage 2 regime split (guide §3.1: broadcast the side that fits) ----
@@ -294,8 +272,7 @@ def tree_radius_join(
     # the pre-partitioned checkpoint (no exchange, no Python), exact
     # d² ≤ r² filter. Identical pair set: a member within r of a routed
     # query lies in its ring; members are unique rows; stage-1 points are
-    # dropped by the same anti-join the leaf path uses. Requires the unique
-    # members table (local_trees has multiple vertex rows per point).
+    # dropped by the same anti-join the leaf path uses.
     # The one-count probe of q is a codegen agg over the (typically cached /
     # filter-derived) query source — cheap against the cogroup it avoids.
     # Default 50k: the broadcast side is the ring-exploded route set
@@ -305,7 +282,7 @@ def tree_radius_join(
     bcast_q_threshold = int(
         os.environ.get("COVERGRID_ROUTE_BCAST_QUERIES", "50000")
     )
-    if getattr(model, "members", None) is not None and q.count() <= bcast_q_threshold:
+    if q.count() <= bcast_q_threshold:
         ring_route = explode_k_ring(to_route, side, k=1, x="qx", y="qy", out="_mcell")
         s1df = spark.createDataFrame(
             pd.DataFrame({"s1_pid": stage1_pids}), "s1_pid long"
@@ -331,10 +308,12 @@ def tree_radius_join(
         )
         return out
 
-    # the members table holds one row per member by construction; the
-    # local_trees fallback (hand-built models) has one row per VERTEX, so a
-    # chain point appears several times and needs the unique pass
-    tree_rows_unique = getattr(model, "members", None) is not None
+    # radius-independent payload → memoized broadcast: tree_knn's expansion
+    # rounds reuse one executor-side copy
+    bc = getattr(model, "_query_bc_cache", None)
+    if bc is None:
+        bc = spark.sparkContext.broadcast(stage1_pids)
+        object.__setattr__(model, "_query_bc_cache", bc)
 
     def stage2(routes_tb, tree_tb):
         import pyarrow as pa
@@ -354,26 +333,19 @@ def tree_radius_join(
         def col(tb, name):
             return tb.column(name).combine_chunks().to_numpy(zero_copy_only=False)
 
-        _t, _pi, s1pids, _s1i, _hb, _hv = bc.value
         # dense grid finish over the hub's UNIQUE member points: same exact
         # result set as traversing the local tree (every member appears as a
         # local vertex; the traversal finds exactly the within-r members),
         # measured ~30× cheaper at ε-graph radii. Distinct-by-construction
-        # is now free (unique points ⇒ no chain-duplicate dedupe), and the
-        # stage-1-tested points are dropped up-front instead of post-hoc.
+        # (one row per member), and the stage-1-tested points are dropped
+        # up-front instead of post-hoc.
         pids = col(tree_tb, "point_id")
-        if tree_rows_unique:
-            keep = ~np.isin(pids, s1pids)
-            upids = pids[keep]
-            first = np.flatnonzero(keep)
-        else:
-            upids, first = np.unique(pids, return_index=True)
-            keep = ~np.isin(upids, s1pids)
-            upids, first = upids[keep], first[keep]
+        keep = ~np.isin(pids, bc.value)
+        upids = pids[keep]
         if not len(upids):
             return empty()
-        px = col(tree_tb, "px")[first].astype(np.float64)
-        py = col(tree_tb, "py")[first].astype(np.float64)
+        px = col(tree_tb, "px")[keep].astype(np.float64)
+        py = col(tree_tb, "py")[keep].astype(np.float64)
         hq, hp = grid_radius_pairs(
             px, py, col(routes_tb, "qx"), col(routes_tb, "qy"), r,
         )
@@ -395,13 +367,11 @@ def tree_radius_join(
             ),
         })
 
-    # cogroup against the narrow pre-partitioned members table when the
-    # model carries one (4 columns, unique rows, exchange/sort-free side);
-    # the full vertex table remains the fallback for hand-built models
-    tree_side = model.members if getattr(model, "members", None) is not None else model.local_trees
+    # cogroup against the narrow pre-partitioned members table (4 columns,
+    # unique rows, exchange/sort-free side)
     hits_local = (
         to_route.groupBy("hub_id")
-        .cogroup(tree_side.groupBy("hub_id"))
+        .cogroup(model.members.groupBy("hub_id"))
         .applyInArrow(stage2, "qid long, pids array<long>")
         .select("qid", F.explode("pids").alias("pid"))
     )
@@ -486,8 +456,8 @@ def tree_knn(
         # exact fallback for queries still uncertified after max_rounds
         # (k ≥ available neighbors, or an r0 underestimate needing more than
         # 2^max_rounds growth): brute-force window top-k over the broadcast
-        # straggler set — same straggler discipline as knn_join, so no query
-        # is ever silently dropped.
+        # straggler set — the same exact fallback as the kNN block kernel's
+        # stragglers, so no query is ever silently dropped.
         cand = (
             F.broadcast(unresolved.withColumnRenamed("id", "src"))
             .join(pts, F.col("src") != F.col("dst"))

@@ -30,7 +30,7 @@ from parallelcovertree_spark.functions.text import (
 )
 from parallelcovertree_spark.operators import cleaning
 from parallelcovertree_spark.operators.epsilon_join import epsilon_self_join
-from parallelcovertree_spark.operators.knn import knn_join
+from parallelcovertree_spark.operators.knn import knn_join_block_kernel
 
 # workload constants (documents table is the web-corpus stand-in)
 EPS_RADIUS = 1.0
@@ -98,19 +98,17 @@ SELECT src, rk AS nbr_rank, dst FROM r WHERE rk <= {KNN_K}
 """,
 )
 def knn_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SURVEY J7/W5: exact kNN k=10 via adaptive grid ring expansion."""
-    return knn_join(_doc_points(spark, sf_dir), k=KNN_K, id_col="id")
+    """SURVEY J7/W5: exact kNN k=10 through the block kernel (adaptive
+    radius, block + one-cell halo)."""
+    return knn_join_block_kernel(_doc_points(spark, sf_dir), k=KNN_K, id_col="id")
 
 
 @_register("knn_docs_kernel", None)
 def knn_docs_kernel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """kNN k=10 through the pipe-lean per-BLOCK kernel plan (the bench
-    path): each point ships ~1.27x (block + halo border) instead of the
-    9x cell-ring explode, dense numpy solve per core cell inside the block.
-    Same answer as the window plan; measured 2.3x faster than the per-cell
-    kernel at 10M points."""
-    from parallelcovertree_spark.operators.knn import knn_join_block_kernel
-
+    """kNN k=10 through the per-BLOCK kernel (the bench path): each point
+    ships ~1.27x (block + halo border), dense numpy solve per core cell
+    inside the block. The same plan as ``knn_docs``; both names stay in
+    the driver window."""
     return knn_join_block_kernel(_doc_points(spark, sf_dir), k=KNN_K, id_col="id")
 
 
@@ -149,8 +147,6 @@ SELECT src, rk AS nbr_rank, dst FROM r WHERE rk <= {KNN_K}
 def knn_docs_queries(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-table kNN (query batch × corpus) through the block kernel — the
     ANN-style search form (SURVEY J6/J7 asymmetric)."""
-    from parallelcovertree_spark.operators.knn import knn_join_block_kernel
-
     pts = _doc_points(spark, sf_dir)
     qs = pts.where(F.col("id") < 100)
     return knn_join_block_kernel(pts, k=KNN_K, queries=qs)
@@ -3423,8 +3419,6 @@ def reverse_knn_counts_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     documents rank it among their k=10 nearest — the spatial hub/influence
     metric (RkNN cardinality). One groupBy over the certified block-kernel
     kNN output; oracle is the by-definition ranked quadratic."""
-    from parallelcovertree_spark.operators.knn import knn_join_block_kernel
-
     nn = knn_join_block_kernel(_doc_points(spark, sf_dir), k=KNN_K, id_col="id")
     return nn.groupBy(F.col("dst").alias("id")).agg(
         F.count(F.lit(1)).alias("n_referrers")
@@ -3706,7 +3700,7 @@ def knn_kdist_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     point's k-th-NN distance, micro-quantized and histogrammed into
     0.1-unit buckets. One groupBy over the certified grid kNN output;
     ranked-quadratic oracle (gate scale)."""
-    nn = knn_join(_doc_points(spark, sf_dir), k=KNN_K, id_col="id").where(
+    nn = knn_join_block_kernel(_doc_points(spark, sf_dir), k=KNN_K, id_col="id").where(
         F.col("nbr_rank") == KNN_K
     )
     a = _doc_points(spark, sf_dir).select(

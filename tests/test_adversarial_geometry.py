@@ -15,11 +15,7 @@ import pandas as pd
 import pytest
 
 from parallelcovertree_spark.operators.epsilon_join import epsilon_self_join
-from parallelcovertree_spark.operators.knn import (
-    knn_join,
-    knn_join_block_kernel,
-    knn_join_grid_kernel,
-)
+from parallelcovertree_spark.operators.knn import knn_join_block_kernel
 from parallelcovertree_spark.oracle import epsilon_graph_np, knn_np
 
 R = 1.25  # exact in binary floating point
@@ -56,7 +52,7 @@ def test_epsilon_half_plan_on_boundaries(spark):
     assert got == want
 
 
-@pytest.mark.parametrize("variant", [knn_join, knn_join_grid_kernel, knn_join_block_kernel])
+@pytest.mark.parametrize("variant", [knn_join_block_kernel])
 def test_knn_variants_on_boundaries(spark, variant):
     pdf = _adversarial_pdf()
     df = spark.createDataFrame(pdf)
@@ -66,17 +62,18 @@ def test_knn_variants_on_boundaries(spark, variant):
 
 def test_knn_block_seam_diagonal_certification(spark):
     """Block-seam × certification interplay (VERDICT r2 next #8): a query in
-    the CORNER core cell of block (0,0) certifies with ≥ k own-cell
+    the CORNER core cell of block (1,1) certifies with ≥ k own-cell
     candidates within r, but its true nearest neighbor sits diagonally
-    across the block seam in block (1,1) — only the 1-cell halo of the
+    across the block seam in block (2,2) — only the 1-cell halo of the
     diagonal block carries it. A missing diagonal-halo replica would not
     fail certification; it would silently return the wrong top-k, so the
     assertion is against the exact numpy oracle.
 
-    Geometry (all f32-exact): r0=0.5, cell_factor=2 → cell s=1.0, B=16 →
-    seam at x=y=16. Query (15.9375, 15.9375); diagonal point (16.0625,
-    16.0625) at d≈0.177 ≤ r; three own-cell points at d=0.25-0.375 certify
-    k=3 within r."""
+    Geometry (all f32-exact): r0=0.5 → cell side ``cell_side(0.5)`` just
+    above 0.5, blocks of 16 cells ≈ 8 units → seam at x=y=16. Query
+    (15.9375, 15.9375) in cell (31, 31); diagonal point (16.0625, 16.0625)
+    in cell (32, 32) at d≈0.177 ≤ r; three own-cell points at d=0.25-0.375
+    certify k=3 within r."""
     q = (15.9375, 15.9375)
     pts = [
         q,
@@ -98,7 +95,7 @@ def test_knn_block_seam_diagonal_certification(spark):
     df = spark.createDataFrame(pdf)
     got = {
         (r.src, r.nbr_rank, r.dst)
-        for r in knn_join_block_kernel(df, k=3, r0=0.5, block_cells=16).collect()
+        for r in knn_join_block_kernel(df, k=3, r0=0.5).collect()
     }
     want = knn_np(pdf, k=3)
     assert got == want

@@ -52,7 +52,7 @@ def test_registry_ops_do_not_accumulate_cache(spark):
 
 
 def test_knn_and_tree_knn_release_caches(spark):
-    from parallelcovertree_spark.operators.knn import knn_join, knn_join_grid_kernel
+    from parallelcovertree_spark.operators.knn import knn_join_block_kernel
     from parallelcovertree_spark.plans.covertree import build_cover_tree
     from parallelcovertree_spark.plans.query import tree_knn
     from parallelcovertree_spark.sources.synthetic import synthetic_points
@@ -60,8 +60,8 @@ def test_knn_and_tree_knn_release_caches(spark):
     pts = synthetic_points(spark, 300)
 
     def sweep():
-        knn_join(pts, k=5).count()
-        knn_join_grid_kernel(pts, k=5).count()
+        knn_join_block_kernel(pts, k=5).count()
+        knn_join_block_kernel(pts, k=5, queries=pts.where("id < 40")).count()
         model = build_cover_tree(pts, hub_cutoff=8)
         tree_knn(model, pts, k=5).count()
 

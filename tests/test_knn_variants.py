@@ -1,15 +1,11 @@
-"""All three kNN physical plans agree with the exact oracle."""
+"""The kNN block kernel agrees with the exact oracle, self-join and
+two-table form."""
 
 from __future__ import annotations
 
 import pytest
 
-from parallelcovertree_spark.operators.knn import (
-    knn_join_block_kernel,
-    knn_join,
-    knn_join_grid_kernel,
-    knn_join_jvm_arrays,
-)
+from parallelcovertree_spark.operators.knn import knn_join_block_kernel
 from parallelcovertree_spark.oracle import knn_np
 from parallelcovertree_spark.sources.synthetic import (
     gaussian_points_np,
@@ -17,19 +13,12 @@ from parallelcovertree_spark.sources.synthetic import (
 )
 
 
-@pytest.mark.parametrize("variant", [knn_join, knn_join_grid_kernel, knn_join_block_kernel, knn_join_jvm_arrays])
+@pytest.mark.parametrize("variant", [knn_join_block_kernel])
 def test_variants_match_oracle(spark, variant):
     pts = synthetic_points(spark, 400).persist()
     got = {(r.src, r.nbr_rank, r.dst) for r in variant(pts, k=10).collect()}
     assert got == knn_np(gaussian_points_np(400), k=10)
     pts.unpersist()
-
-
-def test_jvm_arrays_forced_expansion(spark):
-    """Tiny r0 → multi-round + straggler fallback path."""
-    pts = synthetic_points(spark, 200)
-    got = {(r.src, r.nbr_rank, r.dst) for r in knn_join_jvm_arrays(pts, k=5, r0=0.01).collect()}
-    assert got == knn_np(gaussian_points_np(200), k=5)
 
 
 def test_block_kernel_two_table(spark):

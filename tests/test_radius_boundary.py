@@ -7,7 +7,8 @@ what bucketing at ``cells.cell_side(r)`` guarantees.
 
 The tree stores float32 coordinates, where -5e-324 rounds to -0.0 and 0.1
 moves off the boundary, so the tree paths use a float32-exact twin of the
-same pair: x = -2^-149, x' = r = float32(0.1).
+same pair: x = -2^-149, x' = r = float32(0.1). The kNN block kernel's case
+uses the same twin.
 """
 
 from __future__ import annotations
@@ -22,7 +23,8 @@ from parallelcovertree_spark.operators.epsilon_join import (
     epsilon_self_join,
     hot_cell_salts,
 )
-from parallelcovertree_spark.oracle import epsilon_graph_np
+from parallelcovertree_spark.operators.knn import knn_join_block_kernel
+from parallelcovertree_spark.oracle import epsilon_graph_np, knn_np
 from parallelcovertree_spark.plans.covertree import build_cover_tree
 from parallelcovertree_spark.plans.local_tree import grid_radius_pairs
 from parallelcovertree_spark.plans.query import tree_radius_join
@@ -75,6 +77,25 @@ def test_hot_cell_plan_boundary(spark):
     assert [r.cell_id for r in hot.collect()] == [hot_cell]
     got = _edges(epsilon_self_join(pts, R, hot_cells=hot))
     assert got == _all_pairs(range(8))
+
+
+def test_knn_block_kernel_boundary(spark):
+    """Id 1 is at computed distance exactly r from both id 0 and id 2, so
+    its nearest neighbour is id 0 (tie on d², lower id). At side r id 0 sits
+    two cells from id 1 and id 2 alone would certify id 1."""
+    pdf = pd.DataFrame({
+        "id": np.arange(3, dtype=np.int64),
+        "x": [R32, X0_32, -R32],
+        "y": np.zeros(3),
+    })
+    assert (R32 - X0_32) ** 2 == (-R32 - X0_32) ** 2 == R32 * R32
+    got = {
+        (r.src, r.nbr_rank, r.dst)
+        for r in knn_join_block_kernel(spark.createDataFrame(pdf), k=1, r0=R32).collect()
+    }
+    want = knn_np(pdf, k=1)
+    assert (1, 1, 0) in want
+    assert got == want
 
 
 @pytest.fixture(scope="module")

@@ -114,9 +114,9 @@ def main() -> None:
         epsilon_self_join(pts, radius).write.mode("overwrite").parquet(out)
     elif job == "knn":
         k, out = int(sys.argv[3]), sys.argv[4]
-        from parallelcovertree_spark.operators.knn import knn_join_grid_kernel
+        from parallelcovertree_spark.operators.knn import knn_join_block_kernel
 
-        knn_join_grid_kernel(pts, k=k).write.mode("overwrite").parquet(out)
+        knn_join_block_kernel(pts, k=k).write.mode("overwrite").parquet(out)
     elif job == "covertree":
         radius, out = float(sys.argv[3]), sys.argv[4]
         ckpt = sys.argv[5] if len(sys.argv) > 5 else None
