@@ -16,12 +16,15 @@ Spark re-expression of the reference's two-phase construction
 - **Cutoff** — once active hubs ≥ ``hub_cutoff`` there is enough parallelism
   to finish each hub independently (the reference's load-imbalance ≤ 1.25
   cutoff, DistCoverTree.cpp:101-110,726-758).
-- **Local phase** — one shuffle: ``repartition by hub → groupBy(hub).
-  applyInPandas(numpy cover-tree kernel)`` — the reference's MPI_Alltoallv +
-  per-hub sequential builds (DistCoverTree.cpp:814-934) as a single
-  Spark stage. Local trees carry global point ids + coords in-row, which
-  eliminates the reference's local→global remap join (DistCoverTree.cpp:
-  1134-1139) by schema design.
+- **Local phase** — one shuffle: ``repartition by hub`` + sort, checkpointed
+  as ``members`` (each hub's points) — the reference's MPI_Alltoallv
+  (DistCoverTree.cpp:823-905). Routed queries finish against ``members``
+  with a grid kernel, so the build runs no per-hub tree kernel. The
+  reference's sequential per-hub trees (DistCoverTree.cpp:814-934) are
+  ``local_trees(model)``: built on demand from ``members`` by the numpy
+  cover-tree kernel, for debug dumps and tests. Their rows carry global
+  point ids + coords, which eliminates the reference's local→global remap
+  join (DistCoverTree.cpp:1134-1139) by schema design.
 
 Checkpointed per ``checkpoint_every`` iterations (state parquet + driver JSON
 + lineage metrics), so builds resume mid-level — the north rule's
@@ -57,17 +60,15 @@ class CoverTreeModel:
     max_radius: float
     root_pid: int
     vertices: DataFrame            # (vertex_id, point_id, parent_id, level) top tree
-    local_trees: DataFrame | None  # LOCAL_TREE_SCHEMA rows, None if fully global
     points: DataFrame              # (id, x, y)
-    local_roots: list[int]
+    local_roots: list[int]         # hub vertex ids, one local tree each
     metrics: DataFrame             # per-iteration lineage/metrics
     num_global_iters: int
     has_global_leaves: bool = True  # any leaf vertices from the global phase?
-    # (hub_id, point_id, px, py): each hub's UNIQUE member points, checkpointed
-    # pre-hash-partitioned + pre-sorted on hub_id — the routed query's stage-2
-    # cogroup side. 4 narrow columns and one row per member instead of the
-    # ~2.3-rows-per-point 8-column vertex table: less Arrow per query call,
-    # and the tree side needs no exchange and no sort at query time.
+    # (hub_id, point_id, px, py): each hub's UNIQUE member points, the local
+    # phase's only output — checkpointed pre-hash-partitioned + pre-sorted on
+    # hub_id, None if fully global. The routed query's stage-2 side (it reads
+    # it with no exchange and no sort) and the input of ``local_trees``.
     members: DataFrame | None = None
 
 
@@ -583,10 +584,10 @@ def build_cover_tree(
     imbalance_target`` — the reference's criterion
     (``nprocs*max/total <= 1.25``, src/DistCoverTree.cpp:746-748 /
     dist_build_graph.cpp:29), measured for free inside the per-iteration
-    argmax job. Balanced hubs mean the per-hub local builds pack evenly, so
-    waiting for more hubs only buys sequential global rounds. ``max_iters``
-    stops the global phase early (checkpoint testing); combined with
-    ``resume=True`` the build continues from the last checkpoint.
+    argmax job. Balanced hubs mean the per-hub ``members`` groups pack
+    evenly, so waiting for more hubs only buys sequential global rounds.
+    ``max_iters`` stops the global phase early (checkpoint testing); combined
+    with ``resume=True`` the build continues from the last checkpoint.
     """
     spark = points.sparkSession
     n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
@@ -693,8 +694,11 @@ def build_cover_tree(
             F.lit(1).cast("long").alias("level"),
         )
         top = _vertices_df(spark, verts).unionByName(leafs)
-        return CoverTreeModel(base, 0.0, root_pid, top, None, points, [],
-                              _metrics_df(spark, metrics), 0, True)
+        return CoverTreeModel(
+            base=base, max_radius=0.0, root_pid=root_pid, vertices=top,
+            points=points, local_roots=[], metrics=_metrics_df(spark, metrics),
+            num_global_iters=0, has_global_leaves=True,
+        )
 
     pending: dict | None = None  # last round's decisions, applied lazily
     bounce_dirs: list[str] = []  # applied-state parquet dirs, removed at end
@@ -784,16 +788,16 @@ def build_cover_tree(
 
     # --- hot-hub sub-split (load-balance the local phase) --------------------
     # A hub_cutoff break can leave one dense hub owning 10-15% of the corpus;
-    # its single-task local build then gates the whole phase (and at cluster
-    # scale risks executor OOM). The reference's only lever is more global
-    # rounds (the imbalance criterion, DistCoverTree.cpp:746-748); here
-    # oversized hubs are instead cracked in ONE vectorized pass: members
-    # gridded at the hub's ball scale, cells Morton-packed into ≤max_pts
-    # groups on the driver, each group registered as a child vertex of the
-    # hub and built as its own local tree. Query routing stays EXACT because
-    # it uses each local root's member bounding box (plans/query.py
-    # _hub_boxes), not the level ball — same discipline as the ε-join's
-    # hot-cell-only salting.
+    # its single ``members`` group then gates every routed query's stage-2
+    # task (and at cluster scale risks executor OOM). The reference's only
+    # lever is more global rounds (the imbalance criterion,
+    # DistCoverTree.cpp:746-748); here oversized hubs are instead cracked in
+    # ONE vectorized pass: members gridded at the hub's ball scale, cells
+    # Morton-packed into ≤max_pts groups on the driver, each group registered
+    # as a child vertex of the hub and becoming its own hub in ``members``.
+    # Query routing stays EXACT because it uses each local root's member
+    # bounding box (plans/query.py _hub_boxes), not the level ball — same
+    # discipline as the ε-join's hot-cell-only salting.
     #
     # Driver path: the histogram/remap runs in numpy over the resident state
     # BEFORE the flush (no Spark job; the flushed parquet already carries the
@@ -962,106 +966,38 @@ def build_cover_tree(
                 )
             _trace("hub_balance", t0)
 
-    # --- local phase (DistCoverTree.cpp:814-934 analog) ---------------------
-    local_trees = None
+    # --- local phase (DistCoverTree.cpp:823-905 analog) ---------------------
+    # ONE checkpoint is the local phase: each hub's active points, shuffled
+    # and sorted on the hub exactly once and materialized with AQE off, so
+    # LogicalRDD keeps outputPartitioning/outputOrdering (the adaptive wrapper
+    # would report UnknownPartitioning). Every routed query's cogroup and the
+    # hub-box aggregate read it with ZERO exchange and ZERO sort. No per-hub
+    # tree is built here: queries never read one (``local_trees`` builds them
+    # on demand). The explicit repartition also keeps this exchange at
+    # n_parts tasks instead of the handful AQE would coalesce it to.
     members = None
     local_roots: list[int] = []
     if chains:
         local_roots = sorted(chains.keys())
-        hub_meta = spark.createDataFrame(
-            pd.DataFrame(
-                [(h, vlevel[h], chains[h][0]) for h in local_roots],
-                columns=["h_vtx", "h_level", "h_pid"],
-            ),
-            "h_vtx long, h_level long, h_pid long",
-        )
-        # project to exactly what the kernel reads (guide §4: an opaque
-        # grouped-map ships every column — dist/hub_pt/leaf_parent were ~40%
-        # of the shuffle + Arrow bytes and the kernel never touched them)
-        active = (
-            active_state.select("pid", "x", "y", "hub_vtx")
-            .where(F.col("hub_vtx") >= 0)
-            .join(F.broadcast(hub_meta), F.col("hub_vtx") == F.col("h_vtx"))
-            .select("hub_vtx", "pid", "x", "y", "h_level", "h_pid")
-        )
-        b = base
-
-        def build_group(t_in):
-            # Arrow-native grouped map (guide §4.2 transport discipline, same
-            # as the kNN kernel): int64/float32 columns come out of the Arrow
-            # batch zero-copy; no pandas block consolidation either way
-            import pyarrow as pa
-
-            def col(name, dt):
-                return t_in.column(name).combine_chunks().to_numpy(
-                    zero_copy_only=False).astype(dt, copy=False)
-
-            pids = col("pid", np.int64)
-            hub = int(t_in.column("hub_vtx")[0].as_py())
-            hlevel = int(t_in.column("h_level")[0].as_py())
-            hpid = int(t_in.column("h_pid")[0].as_py())
-            # root (hub point) first, members by ascending pid: deterministic
-            # (lexsort primary key = last: root flag, then ascending pid —
-            # same order as the former _is_root/pid sort_values)
-            order = np.lexsort((pids, pids != hpid))
-            pids = pids[order]
-            xy = np.stack(
-                [col("x", np.float32)[order], col("y", np.float32)[order]],
-                axis=1,
-            )
-            t = build_cover_tree_np(xy, base=b)
-            return pa.table({
-                "hub_id": np.full(len(t.pt), hub, dtype=np.int64),
-                "lvertex_id": np.arange(len(t.pt), dtype=np.int64),
-                "point_id": pids[t.pt],
-                "lparent_id": t.parent.astype(np.int64),
-                "level": t.level + hlevel,
-                "px": xy[t.pt, 0],
-                "py": xy[t.pt, 1],
-                "lmax_radius": np.full(len(t.pt), t.max_radius, dtype=np.float64),
-            })
-
-        # ONE shaped checkpoint feeds the whole local phase AND the members
-        # table: the active rows are shuffled/sorted on hub_vtx exactly once
-        # and materialized with AQE off, so LogicalRDD keeps
-        # outputPartitioning/outputOrdering (the adaptive wrapper would
-        # report UnknownPartitioning). Downstream, (a) the per-hub groupBy
-        # build reads it with ZERO exchange and ZERO sort, and (b) the
-        # members table is a bare column projection (ProjectExec is
-        # alias-aware for both partitioning and ordering), replacing the
-        # former second full exchange+sort+checkpoint of the state — the
-        # shuffle moved from twice-per-build to once (guide §2.4), and every
-        # routed query's cogroup still reads the tree side exchange/sort-free.
-        # The explicit repartition also keeps this byte-light, compute-heavy
-        # exchange at n_parts tasks instead of the handful AQE would coalesce
-        # it to.
         t0 = time.time()
         aqe_prev = spark.conf.get("spark.sql.adaptive.enabled")
         spark.conf.set("spark.sql.adaptive.enabled", "false")
         try:
-            shaped = (
-                active.repartition(n_parts, "hub_vtx")
-                .sortWithinPartitions("hub_vtx")
+            members = (
+                active_state.where(F.col("hub_vtx") >= 0)
+                .select(
+                    F.col("hub_vtx").alias("hub_id"),
+                    F.col("pid").alias("point_id"),
+                    F.col("x").alias("px"),
+                    F.col("y").alias("py"),
+                )
+                .repartition(n_parts, "hub_id")
+                .sortWithinPartitions("hub_id")
                 .localCheckpoint(eager=True)
             )
         finally:
             spark.conf.set("spark.sql.adaptive.enabled", aqe_prev)
-        _trace("shaped", t0)
-
-        t0 = time.time()
-        local_trees = (
-            shaped.groupBy("hub_vtx")
-            .applyInArrow(build_group, LOCAL_TREE_SCHEMA)
-            .localCheckpoint(eager=True)
-        )
-        _trace("local_trees", t0)
-
-        members = shaped.select(
-            F.col("hub_vtx").alias("hub_id"),
-            F.col("pid").alias("point_id"),
-            F.col("x").alias("px"),
-            F.col("y").alias("py"),
-        )
+        _trace("members", t0)
 
     # --- assemble top-tree vertex table --------------------------------------
     t0 = time.time()
@@ -1087,17 +1023,82 @@ def build_cover_tree(
         vertices = top.localCheckpoint(eager=True)
     _trace("vertices", t0)
 
-    # local_trees + vertices are materialized → the state bounce files are dead
+    # members + vertices are materialized → the state bounce files are dead
     import shutil
 
     for p in bounce_dirs:
         shutil.rmtree(p, ignore_errors=True)
 
     return CoverTreeModel(
-        base, max_radius, root_pid, vertices, local_trees, points,
-        local_roots, _metrics_df(spark, metrics), it, has_leaves,
-        members=members,
+        base=base, max_radius=max_radius, root_pid=root_pid, vertices=vertices,
+        points=points, local_roots=local_roots,
+        metrics=_metrics_df(spark, metrics), num_global_iters=it,
+        has_global_leaves=has_leaves, members=members,
     )
+
+
+def local_trees(model: CoverTreeModel) -> DataFrame | None:
+    """The reference's per-hub sequential cover trees (DistCoverTree.cpp:
+    814-934), built on demand from ``model.members``: one LOCAL_TREE_SCHEMA
+    table, or None for a fully-global model. No query reads them (stage 2
+    finishes against ``members``); debug dumps and tests do.
+
+    Each hub's level and point come from its top-tree vertex. The hub table
+    is broadcast onto ``members``, which is already partitioned and sorted
+    on the hub, so the grouped kernel runs with no exchange. The kernel sees
+    the hub point first, then the members by ascending point id: the output
+    is deterministic for a given model."""
+    if model.members is None:
+        return None
+    hubs = model.vertices.where(
+        F.col("vertex_id").isin(model.local_roots)
+    ).select(
+        F.col("vertex_id").alias("h_vtx"),
+        F.col("level").alias("h_level"),
+        F.col("point_id").alias("h_pid"),
+    )
+    # project to exactly what the kernel reads: a grouped map ships every
+    # column through Arrow
+    grouped = (
+        model.members.join(F.broadcast(hubs), F.col("hub_id") == F.col("h_vtx"))
+        .select("hub_id", "point_id", "px", "py", "h_level", "h_pid")
+    )
+    b = model.base
+
+    def build_hub(t_in):
+        # Arrow-native grouped map: int64/float32 columns come out of the
+        # Arrow batch zero-copy; no pandas block consolidation either way
+        import pyarrow as pa
+
+        def col(name, dt):
+            return t_in.column(name).combine_chunks().to_numpy(
+                zero_copy_only=False).astype(dt, copy=False)
+
+        pids = col("point_id", np.int64)
+        hub = int(t_in.column("hub_id")[0].as_py())
+        hlevel = int(t_in.column("h_level")[0].as_py())
+        hpid = int(t_in.column("h_pid")[0].as_py())
+        # root (hub point) first, members by ascending pid (lexsort primary
+        # key = last: root flag, then ascending pid)
+        order = np.lexsort((pids, pids != hpid))
+        pids = pids[order]
+        xy = np.stack(
+            [col("px", np.float32)[order], col("py", np.float32)[order]],
+            axis=1,
+        )
+        t = build_cover_tree_np(xy, base=b)
+        return pa.table({
+            "hub_id": np.full(len(t.pt), hub, dtype=np.int64),
+            "lvertex_id": np.arange(len(t.pt), dtype=np.int64),
+            "point_id": pids[t.pt],
+            "lparent_id": t.parent.astype(np.int64),
+            "level": t.level + hlevel,
+            "px": xy[t.pt, 0],
+            "py": xy[t.pt, 1],
+            "lmax_radius": np.full(len(t.pt), t.max_radius, dtype=np.float64),
+        })
+
+    return grouped.groupBy("hub_id").applyInArrow(build_hub, LOCAL_TREE_SCHEMA)
 
 
 def _vertices_df(spark: SparkSession, verts: list[tuple]) -> DataFrame:

@@ -16,11 +16,13 @@ A from-scratch vectorized implementation of the level-batched cover-tree
 
 Float discipline: float32 storage, float64 arithmetic (Point.cpp:27-38).
 
-This kernel is used (a) per hub inside ``applyInPandas`` for the distributed
-build's local phase (the reference's ``build_local_trees`` analog,
-DistCoverTree.cpp:814-934), and (b) as the driver-side twin for tests. It is
-NOT a translation of the C++ (no per-point insertion loops; phases are
-vectorized over all hubs at once).
+This kernel is used (a) per hub inside ``applyInArrow`` by
+``local_trees(model)`` (plans/covertree.py), which builds the reference's
+phase-2 local trees (``build_local_trees``, DistCoverTree.cpp:814-934) on
+demand from a model's ``members`` — the build itself runs no tree kernel —
+and (b) as the driver-side twin for tests. It is NOT a translation of the
+C++ (no per-point insertion loops; phases are vectorized over all hubs at
+once).
 """
 
 from __future__ import annotations

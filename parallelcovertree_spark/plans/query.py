@@ -185,7 +185,7 @@ def tree_radius_join(
     # its hub's box, so dist(q, box) ≤ dist(q, member) ≤ r and no true hit
     # can be pruned; measured 4.4 → 1.9 routed hubs/query at 1M points
     # against covering-ball routing. A model has ``members`` exactly when it
-    # has local trees.
+    # has local roots (it is None for a fully-global build).
     to_route = None
     if model.members is not None:
         x0, x1, y0, y1 = _hub_boxes(model, vid_of_stop)
@@ -388,6 +388,22 @@ def tree_epsilon_graph(model: CoverTreeModel, radius: float) -> DataFrame:
     return tree_radius_join(model, model.points, radius)
 
 
+def _corpus_radius(model: CoverTreeModel, k: int) -> float:
+    """The radius expected to hold ~k CORPUS points around a query: sized
+    from the corpus density, never from the query set's (m queries over n
+    points would start √(n/m) times too wide). One agg job per model and k,
+    memoized like ``_hub_boxes``."""
+    from parallelcovertree_spark.operators.knn import estimate_radius
+
+    cache = getattr(model, "_radius_cache", None)
+    if cache is None:
+        cache = {}
+        object.__setattr__(model, "_radius_cache", cache)
+    if k not in cache:
+        cache[k] = estimate_radius(model.points, k)
+    return cache[k]
+
+
 def tree_knn(
     model: CoverTreeModel,
     queries: DataFrame,
@@ -405,14 +421,12 @@ def tree_knn(
     radius (the reference's kNN ground truth is brute force,
     programs/epsilon_graph.cpp:113-118; this is the tree-indexed equivalent).
     Returns (src, nbr_rank, dst)."""
-    from parallelcovertree_spark.operators.knn import estimate_radius
-
     q = queries.select(
         F.col(qid_col).cast("long").alias("id"),
         F.col(x).cast("double").alias("x"),
         F.col(y).cast("double").alias("y"),
     ).persist()
-    r = float(r0) if r0 is not None else estimate_radius(q, k + 1)
+    r = float(r0) if r0 is not None else _corpus_radius(model, k + 1)
     pts = model.points.select(
         F.col("id").alias("dst"),
         F.col("x").cast("double").alias("tx"),

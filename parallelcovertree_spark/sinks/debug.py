@@ -12,7 +12,7 @@
 
 from __future__ import annotations
 
-from parallelcovertree_spark.plans.covertree import CoverTreeModel
+from parallelcovertree_spark.plans.covertree import CoverTreeModel, local_trees
 
 
 def write_gml(model: CoverTreeModel, path: str) -> None:
@@ -53,5 +53,6 @@ def dump_info(model: CoverTreeModel, out_dir: str) -> None:
     opts = {"sep": "\t", "header": "true"}
     model.vertices.write.mode("overwrite").options(**opts).csv(f"{out_dir}/vertices")
     model.metrics.write.mode("overwrite").options(**opts).csv(f"{out_dir}/metrics")
-    if model.local_trees is not None:
-        model.local_trees.write.mode("overwrite").options(**opts).csv(f"{out_dir}/local_trees")
+    lt = local_trees(model)  # built here: the model keeps only members
+    if lt is not None:
+        lt.write.mode("overwrite").options(**opts).csv(f"{out_dir}/local_trees")

@@ -6,9 +6,10 @@ from __future__ import annotations
 
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 from parallelcovertree_spark.oracle import epsilon_graph_np
-from parallelcovertree_spark.plans.covertree import build_cover_tree
+from parallelcovertree_spark.plans.covertree import build_cover_tree, local_trees
 from parallelcovertree_spark.plans.query import tree_epsilon_graph, tree_radius_join
 from parallelcovertree_spark.sources.synthetic import (
     gaussian_points_np,
@@ -24,7 +25,7 @@ def test_global_build_epsilon_matches_bruteforce(spark):
     """Fully-global build (hub_cutoff=None): pure DataFrame iteration."""
     pts = synthetic_points(spark, 300).persist()
     model = build_cover_tree(pts, hub_cutoff=None)
-    assert model.local_trees is None
+    assert local_trees(model) is None
     got = _edges(tree_epsilon_graph(model, 1.0))
     want = epsilon_graph_np(gaussian_points_np(300), 1.0)
     assert got == want
@@ -36,7 +37,7 @@ def test_two_phase_build_epsilon_matches_bruteforce(spark, cutoff, n, r):
     """Global phase + per-hub local trees via cogroup routing."""
     pts = synthetic_points(spark, n).persist()
     model = build_cover_tree(pts, hub_cutoff=cutoff)
-    assert model.local_trees is not None
+    assert local_trees(model) is not None
     assert len(model.local_roots) >= cutoff
     got = _edges(tree_epsilon_graph(model, r))
     want = epsilon_graph_np(gaussian_points_np(n), r)
@@ -58,7 +59,7 @@ def test_driver_and_block_paths_identical(spark):
 
     def lset(m):
         return {(r.hub_id, r.lvertex_id, r.point_id, r.lparent_id, r.level)
-                for r in m.local_trees.collect()}
+                for r in local_trees(m).collect()}
 
     assert vset(m_drv) == vset(m_blk)
     assert lset(m_drv) == lset(m_blk)
@@ -105,6 +106,64 @@ def test_tree_invariants(spark):
         )
         # covering: child within max_radius * base^-parent_level of parent
         assert d <= model.max_radius * model.base ** (-1.0 * p.level) + 1e-9
+    pts.unpersist()
+
+
+def _dense_square_beside_background(spark):
+    """6000 uniform points in a 10x10 square beside 2000 sparse ones: at
+    hub_cutoff=16 one hub holds >4096 square points and is sub-split."""
+    import pandas as pd
+
+    rng = np.random.default_rng(11)
+    sparse = rng.uniform(-50.0, 50.0, size=(2000, 2))
+    dense = rng.uniform(20.0, 30.0, size=(6000, 2))
+    xy = np.concatenate([sparse, dense]).astype(np.float32)
+    return spark.createDataFrame(pd.DataFrame({
+        "id": np.arange(len(xy), dtype=np.int64), "x": xy[:, 0], "y": xy[:, 1],
+    }))
+
+
+@pytest.mark.parametrize("fixture", ["gaussian", "subsplit_hub"])
+def test_local_tree_invariants(spark, monkeypatch, fixture):
+    """On-demand local trees: each hub's tree holds exactly its members,
+    is rooted at the hub's own point, and satisfies the covering invariant
+    (child within lmax_radius * base^-(parent level - hub level))."""
+    from parallelcovertree_spark.plans import covertree as ct
+
+    packed = []
+    morton = ct._morton
+    monkeypatch.setattr(
+        ct, "_morton", lambda cx, cy, bits=21: packed.append(1) or morton(cx, cy, bits)
+    )
+    if fixture == "gaussian":
+        pts = synthetic_points(spark, 800).persist()
+    else:
+        pts = _dense_square_beside_background(spark).persist()
+    model = build_cover_tree(pts, hub_cutoff=16)
+    assert bool(packed) == (fixture == "subsplit_hub")  # a hub was sub-split
+
+    mem = model.members.toPandas()
+    assert not mem["point_id"].duplicated().any()
+    hubs = {r.vertex_id: r for r in
+            model.vertices.where(F.col("vertex_id").isin(model.local_roots)).collect()}
+    assert set(hubs) == set(model.local_roots) == set(mem["hub_id"])
+    lt = local_trees(model).toPandas()
+    assert set(lt["hub_id"]) == set(hubs)
+    for h, tree in lt.groupby("hub_id"):
+        assert set(tree["point_id"]) == set(mem.loc[mem["hub_id"] == h, "point_id"])
+        by_lv = tree.set_index("lvertex_id")
+        assert by_lv.loc[0, "point_id"] == hubs[h].point_id
+        assert by_lv.loc[0, "lparent_id"] == -1
+        kids = tree[tree["lparent_id"] >= 0]
+        par = by_lv.loc[kids["lparent_id"]]
+        d = np.sqrt(
+            (kids["px"].to_numpy(np.float64) - par["px"].to_numpy(np.float64)) ** 2
+            + (kids["py"].to_numpy(np.float64) - par["py"].to_numpy(np.float64)) ** 2
+        )
+        bound = kids["lmax_radius"].to_numpy() * model.base ** (
+            -1.0 * (par["level"].to_numpy() - hubs[h].level)
+        )
+        assert (d <= bound + 1e-9).all()
     pts.unpersist()
 
 

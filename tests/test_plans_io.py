@@ -74,7 +74,7 @@ def test_fvecs_roundtrip(tmp_path, spark):
 
 
 def test_gml_and_tsv_dumps(tmp_path, spark):
-    from parallelcovertree_spark.plans.covertree import build_cover_tree
+    from parallelcovertree_spark.plans.covertree import build_cover_tree, local_trees
     from parallelcovertree_spark.sinks.debug import dump_info, write_gml
 
     pts = synthetic_points(spark, 120)
@@ -88,6 +88,8 @@ def test_gml_and_tsv_dumps(tmp_path, spark):
     verts = spark.read.options(sep="\t", header=True).csv(str(tmp_path / "info/vertices"))
     assert verts.count() == model.vertices.count()
     assert spark.read.options(sep="\t", header=True).csv(str(tmp_path / "info/metrics")).count() > 0
+    dumped = spark.read.options(sep="\t", header=True).csv(str(tmp_path / "info/local_trees"))
+    assert dumped.count() == local_trees(model).count() > 0
 
 
 def test_fvecs_multifile_unique_ids(tmp_path, spark):

@@ -2,7 +2,10 @@
 
 Usage: python tools/profile_build.py [n_cpus]
 Times: state init, df->blocks bounce, per-round global phase, flush bounce,
-local phase — so optimization targets the measured cost, not a guess.
+the local phase's ``members`` checkpoint — so optimization targets the
+measured cost, not a guess. The per-hub local trees are not part of a build
+(``local_trees(model)`` in plans/covertree.py builds them on demand), so they
+are not timed.
 """
 
 from __future__ import annotations
@@ -45,7 +48,7 @@ def main() -> None:
         mets = [r.asDict() for r in model.metrics.collect()]
         iters = sum(m["duration_ms"] for m in mets) / 1000.0
         print(f"rep{rep}: total={total:.2f}s  iter_sum={iters:.2f}s  "
-              f"rounds={len(mets)}  (bounce+flush+local={total-iters:.2f}s)")
+              f"rounds={len(mets)}  (bounce+flush+members={total-iters:.2f}s)")
         for m in mets:
             print(f"  it={m['iter']:>3} hubs={m['n_hubs']:>4} "
                   f"ms={m['duration_ms']:>6} parts={m['n_partitions']}")
