@@ -8,14 +8,15 @@ member boxes intersect the query ball (DistCoverTree.cpp:1088-1125
 ``local_radii_query`` semantics), then route each query to its target hubs
 and finish against the hubs' ``members`` rows — the Spark analog of the
 reference's batched query-routing design note (idea.txt:1-21, SURVEY J6).
+Both stages are JVM joins: stage 1 probes broadcast literal tables built
+from the top tree, stage 2 equi-joins the routes with ``members`` on
+(hub, grid cell) and lets the planner choose the join strategy.
 
 Result sets are unioned + dedup'd (the reference's ``allgather_distinct``,
 DistCoverTree.cpp:657-677).
 """
 
 from __future__ import annotations
-
-import os
 
 import numpy as np
 from pyspark.sql import DataFrame, Window
@@ -24,10 +25,7 @@ from pyspark.sql import functions as F
 from parallelcovertree_spark.functions.cells import cell_side, explode_k_ring, with_cell
 from parallelcovertree_spark.functions.geo import dist2_expr
 from parallelcovertree_spark.plans.covertree import CoverTreeModel
-from parallelcovertree_spark.plans.local_tree import (
-    TreeArrays,
-    grid_radius_pairs,
-)
+from parallelcovertree_spark.plans.local_tree import TreeArrays
 
 
 def _top_tree_arrays(model: CoverTreeModel) -> tuple[TreeArrays, np.ndarray, np.ndarray]:
@@ -118,21 +116,27 @@ def tree_radius_join(
     The result is distinct-BY-CONSTRUCTION — no terminal ``.distinct()``
     shuffle over the (potentially huge) pair set. The three hit sources are
     made disjoint: stage 1 tests exactly the points of NON-stop top vertices
-    (deduped in-kernel; a chain point can sit on several vertices); stage 2
+    (deduped on the driver; a chain point can sit on several vertices); stage 2
     and the leaf join drop those same points (stage 1 is guaranteed to find
     them: a vertex whose point is within r always passes its own traversal
     bound). Stage 2 covers each corpus point at most once (one owning hub);
-    leaves are disjoint from local trees by deactivation."""
+    leaves are disjoint from local trees by deactivation.
+
+    One plan serves every query-set size: stage 2 is an unhinted equi-join
+    of the ring-exploded routes with ``members`` on (hub_id, cell), so the
+    answer never depends on which join strategy the planner picks."""
     spark = queries.sparkSession
     tree, upid, stop = _top_tree_arrays(model)
     vid_of_stop = np.array(model.local_roots, dtype=np.int64)
     # global pids tested by stage 1 = points of NON-stop top vertices (stop
-    # vertices are routed, their point is tested inside the local tree)
+    # vertices are routed, their point is tested by stage 2 with its hub)
     nonstop = np.ones(len(tree.pt), dtype=bool)
     if len(stop):
         nonstop[stop] = False
     s1idx = np.unique(tree.pt[nonstop])  # point indices, unique
     stage1_pids = upid[s1idx]            # sorted (pt indices sort like pids)
+    # the leaf join and stage 2 drop these points with one isin predicate
+    s1_ids = stage1_pids.tolist()
     r = float(radius)
 
     q = queries.select(
@@ -245,13 +249,10 @@ def tree_radius_join(
         # drop leaf points stage 1 already tests (a dup-cluster's root point
         # can be both a top vertex point and a leaf) — keeps the union
         # distinct without a terminal shuffle
-        s1 = spark.createDataFrame(
-            [(int(p),) for p in stage1_pids], "s1_pid long"
-        )
         leaf_pts = (
             model.vertices.where(F.col("vertex_id") >= LEAF_VID_BASE)
             .select(F.col("point_id").alias("id"))
-            .join(F.broadcast(s1), F.col("id") == F.col("s1_pid"), "left_anti")
+            .where(~F.col("id").isin(s1_ids))
             .join(model.points, "id")
         )
         qn = q.select("qid", F.col("qx").alias("x"), F.col("qy").alias("y"))
@@ -263,123 +264,35 @@ def tree_radius_join(
     if model.members is None:
         return hits_top.select(F.col("qid").alias("src"), F.col("pid").alias("dst"))
 
-    # --- stage 2 regime split (guide §3.1: broadcast the side that fits) ----
-    # For SMALL query sets (selective lookups, kNN expansion rounds) the
-    # cogroup's fixed cost — Arrow-shipping the full members table to Python
-    # on every call — dominates. Below the threshold the finish is instead a
-    # pure-JVM broadcast hash join: the routed queries explode to their
-    # 9-cell ring (~17 rows/query, a few MB), members probe it map-side over
-    # the pre-partitioned checkpoint (no exchange, no Python), exact
-    # d² ≤ r² filter. Identical pair set: a member within r of a routed
-    # query lies in its ring; members are unique rows; stage-1 points are
-    # dropped by the same anti-join the leaf path uses.
-    # The one-count probe of q is a codegen agg over the (typically cached /
-    # filter-derived) query source — cheap against the cogroup it avoids.
-    # Default 50k: the broadcast side is the ring-exploded route set
-    # (~2 routes/query x 9 cells x ~44 B), so 50k queries is a ~40 MB
-    # broadcast — comfortably inside executor memory at any cluster size,
-    # while 100k+ starts to be a real per-executor allocation.
-    bcast_q_threshold = int(
-        os.environ.get("COVERGRID_ROUTE_BCAST_QUERIES", "50000")
+    # --- stage 2: one JVM equi-join on (hub, cell) ---------------------------
+    # The routed queries explode to their 9-cell ring at ``cell_side(r)``;
+    # each member that stage 1 does not test gets its own cell, and the two
+    # sides join on (hub_id, cell) with the exact d² ≤ r² filter. A member
+    # within r of a routed query lies in its ring, and members are unique
+    # rows, so the pairs are distinct. No broadcast hint: the planner and AQE
+    # pick the strategy from the sizes. A side under the broadcast threshold
+    # is broadcast (at 57k points that is ``members`` itself, for ε-graph and
+    # selective calls alike, so stage 2 shuffles nothing); otherwise the
+    # join shuffles both sides on (hub_id, cell).
+    ring_route = explode_k_ring(to_route, side, k=1, x="qx", y="qy", out="_mcell")
+    mem = with_cell(
+        model.members.where(~F.col("point_id").isin(s1_ids)),
+        side, x="px", y="py", out="_mcell",
     )
-    if q.count() <= bcast_q_threshold:
-        ring_route = explode_k_ring(to_route, side, k=1, x="qx", y="qy", out="_mcell")
-        s1df = spark.createDataFrame(
-            pd.DataFrame({"s1_pid": stage1_pids}), "s1_pid long"
-        )
-        mem = (
-            model.members
-            .join(F.broadcast(s1df),
-                  F.col("point_id") == F.col("s1_pid"), "left_anti")
-        )
-        mem = with_cell(mem, side, x="px", y="py", out="_mcell")
-        hits_local = (
-            mem.alias("m")
-            .join(
-                F.broadcast(ring_route).alias("t"),
-                (F.col("m.hub_id") == F.col("t.hub_id"))
-                & (F.col("m._mcell") == F.col("t._mcell")),
-            )
-            .where(dist2_expr("qx", "qy", "px", "py") <= F.lit(r * r))
-            .select("qid", F.col("point_id").alias("pid"))
-        )
-        out = hits_top.unionByName(hits_local).select(
-            F.col("qid").alias("src"), F.col("pid").alias("dst")
-        )
-        return out
-
-    # radius-independent payload → memoized broadcast: tree_knn's expansion
-    # rounds reuse one executor-side copy
-    bc = getattr(model, "_query_bc_cache", None)
-    if bc is None:
-        bc = spark.sparkContext.broadcast(stage1_pids)
-        object.__setattr__(model, "_query_bc_cache", bc)
-
-    def stage2(routes_tb, tree_tb):
-        import pyarrow as pa
-
-        def empty():
-            return pa.table({
-                "qid": pa.array(np.empty(0, np.int64), pa.int64()),
-                "pids": pa.ListArray.from_arrays(
-                    pa.array(np.zeros(1, np.int32)),
-                    pa.array(np.empty(0, np.int64), pa.int64()),
-                ),
-            })
-
-        if not routes_tb.num_rows or not tree_tb.num_rows:
-            return empty()
-
-        def col(tb, name):
-            return tb.column(name).combine_chunks().to_numpy(zero_copy_only=False)
-
-        # dense grid finish over the hub's UNIQUE member points: same exact
-        # result set as traversing the local tree (every member appears as a
-        # local vertex; the traversal finds exactly the within-r members),
-        # measured ~30× cheaper at ε-graph radii. Distinct-by-construction
-        # (one row per member), and the stage-1-tested points are dropped
-        # up-front instead of post-hoc.
-        pids = col(tree_tb, "point_id")
-        keep = ~np.isin(pids, bc.value)
-        upids = pids[keep]
-        if not len(upids):
-            return empty()
-        px = col(tree_tb, "px")[keep].astype(np.float64)
-        py = col(tree_tb, "py")[keep].astype(np.float64)
-        hq, hp = grid_radius_pairs(
-            px, py, col(routes_tb, "qx"), col(routes_tb, "qy"), r,
-        )
-        # PACKED return leg (same discipline as the kNN kernel): hq is
-        # query-index-ascending by construction, so one run-length pass packs
-        # each query's pids into a zero-copy ListArray — ~15x fewer rows
-        # cross the Python->JVM boundary at ε-graph densities; a codegen
-        # posexplode rebuilds the pair rows JVM-side.
-        if not len(hq):
-            return empty()
-        gstart = np.flatnonzero(np.r_[True, hq[1:] != hq[:-1]])
-        offsets = np.zeros(len(gstart) + 1, dtype=np.int32)
-        offsets[1:-1] = gstart[1:]
-        offsets[-1] = len(hq)
-        return pa.table({
-            "qid": pa.array(col(routes_tb, "qid")[hq[gstart]], pa.int64()),
-            "pids": pa.ListArray.from_arrays(
-                pa.array(offsets), pa.array(upids[hp], pa.int64())
-            ),
-        })
-
-    # cogroup against the narrow pre-partitioned members table (4 columns,
-    # unique rows, exchange/sort-free side)
     hits_local = (
-        to_route.groupBy("hub_id")
-        .cogroup(model.members.groupBy("hub_id"))
-        .applyInArrow(stage2, "qid long, pids array<long>")
-        .select("qid", F.explode("pids").alias("pid"))
+        mem.alias("m")
+        .join(
+            ring_route.alias("t"),
+            (F.col("m.hub_id") == F.col("t.hub_id"))
+            & (F.col("m._mcell") == F.col("t._mcell")),
+        )
+        .where(dist2_expr("qx", "qy", "px", "py") <= F.lit(r * r))
+        .select("qid", F.col("point_id").alias("pid"))
     )
     # sources are pairwise disjoint (see docstring) → plain union, no shuffle
-    out = hits_top.unionByName(hits_local).select(
+    return hits_top.unionByName(hits_local).select(
         F.col("qid").alias("src"), F.col("pid").alias("dst")
     )
-    return out
 
 
 def tree_epsilon_graph(model: CoverTreeModel, radius: float) -> DataFrame:

@@ -34,7 +34,7 @@ def test_global_build_epsilon_matches_bruteforce(spark):
 
 @pytest.mark.parametrize("cutoff,n,r", [(8, 600, 0.5), (8, 600, 2.0), (32, 1000, 1.0)])
 def test_two_phase_build_epsilon_matches_bruteforce(spark, cutoff, n, r):
-    """Global phase + per-hub local trees via cogroup routing."""
+    """Global phase + hubs: routed queries finish against ``members``."""
     pts = synthetic_points(spark, n).persist()
     model = build_cover_tree(pts, hub_cutoff=cutoff)
     assert local_trees(model) is not None

@@ -113,14 +113,20 @@ def boundary_corpus(spark):
 
 
 @pytest.mark.parametrize("cutoff", [None, 4])
-def test_tree_radius_join_boundary(spark, boundary_corpus, monkeypatch, cutoff):
-    """Stage 1 (global tree and leaves) and both stage-2 regimes: the
-    broadcast join (≤ threshold queries) and the cogroup (above it)."""
+def test_tree_radius_join_boundary(spark, boundary_corpus, cutoff):
+    """Stage 1 (global tree and leaves) and the stage-2 join under both
+    strategies the planner can pick: the session default (a broadcast of
+    the small side) and a shuffled join with broadcasts switched off."""
     pdf, pts = boundary_corpus
     model = build_cover_tree(pts, hub_cutoff=cutoff)
     assert (model.members is not None) == (cutoff is not None)
     want = epsilon_graph_np(pdf, R32)
     assert _all_pairs([0, 1]) <= want
-    for bcast_queries in ("50000", "0"):
-        monkeypatch.setenv("COVERGRID_ROUTE_BCAST_QUERIES", bcast_queries)
-        assert _edges(tree_radius_join(model, pts, R32)) == want, bcast_queries
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    try:
+        for threshold in (prev, "-1"):
+            spark.conf.set(key, threshold)
+            assert _edges(tree_radius_join(model, pts, R32)) == want, threshold
+    finally:
+        spark.conf.set(key, prev)

@@ -1,14 +1,15 @@
 """Per-task Python worker set-up, read from a Spark event log.
 
 Runs at ``local[4]`` with 16 shuffle partitions, each call under its own job
-group: one warm-up kNN call (20k points), three ``knn_join_block_kernel(k=10)``
-calls on 150k geocoder points each, then ``build_cover_tree(hub_cutoff=64)``
-and ``tree_epsilon_graph`` on 57,344 Gaussian points. Spark writes an
-uncompressed, non-rolling event log into the given directory. The script then
-prints one JSON object: the wall time of every call and, per job group, the
-per-task median, mean and sum of Spark's Python SQL metrics ("time to start /
-initialize / run Python workers") and of the executor run time, over the tasks
-that ran a Python UDF.
+group: one warm-up kNN call (20k points), then three
+``knn_join_block_kernel(k=10)`` calls on 150k geocoder points each; the kNN
+kernel is the engine's Python-UDF hot path (the cover-tree build and the
+routed tree queries run none). Spark writes an uncompressed, non-rolling
+event log into the given directory. The script then prints one JSON object:
+the wall time of every call and, per job group, the per-task median, mean
+and sum of Spark's Python SQL metrics ("time to start / initialize / run
+Python workers") and of the executor run time, over the tasks that ran a
+Python UDF.
 
     python tools/worker_setup_probe.py <new log dir>
 """
@@ -27,10 +28,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from parallelcovertree_spark.functions import geo  # noqa: E402
 from parallelcovertree_spark.operators.knn import knn_join_block_kernel  # noqa: E402
-from parallelcovertree_spark.plans.covertree import build_cover_tree  # noqa: E402
-from parallelcovertree_spark.plans.query import tree_epsilon_graph  # noqa: E402
 from parallelcovertree_spark.session import get_spark  # noqa: E402
-from parallelcovertree_spark.sources.synthetic import synthetic_points  # noqa: E402
 
 PY_METRICS = (
     "time to start Python workers",
@@ -67,11 +65,6 @@ def run_calls(log_dir: Path) -> dict[str, list[float]]:
         for j in range(3):
             pts = _geo_points(spark, 1000 + j * 150_000, 150_000)
             timed("knn", lambda: knn_join_block_kernel(pts, k=10).count())
-        tp = synthetic_points(spark, 57_344, var=10.0, seed=7).persist()
-        tp.count()
-        model = timed("covertree", lambda: build_cover_tree(tp, hub_cutoff=64))
-        r = 0.03 * (1e6 / 57_344) ** 0.5
-        timed("query.eps", lambda: tree_epsilon_graph(model, r).count())
     finally:
         spark.stop()
     return dict(walls)
