@@ -16,16 +16,17 @@ Spark re-expression of the reference's two-phase construction
 - **Cutoff** — once active hubs ≥ ``hub_cutoff`` there is enough parallelism
   to finish each hub independently (the reference's load-imbalance ≤ 1.25
   cutoff, DistCoverTree.cpp:101-110,726-758).
-- **Local phase** — one checkpoint, ``members`` (each hub's points, tagged
-  with their hub), with no shuffle. The reference's MPI_Alltoallv
-  (DistCoverTree.cpp:823-905) becomes the exchange of each routed query's
-  stage-2 join on (hub, grid cell), so the build runs no per-hub tree
-  kernel. The reference's sequential per-hub trees
-  (DistCoverTree.cpp:814-934) are ``local_trees(model)``: built on demand
-  from ``members`` by the numpy cover-tree kernel, for debug dumps and
-  tests. Their rows carry global point ids + coords, which eliminates the
-  reference's local→global remap join (DistCoverTree.cpp:1134-1139) by
-  schema design.
+- **Local phase** — one shuffle: ``repartition by hub`` + sort, checkpointed
+  as ``members`` (each hub's points) — the reference's MPI_Alltoallv
+  (DistCoverTree.cpp:823-905). Routed queries finish against ``members``
+  (a JVM join on hub and grid cell, or a per-hub grid kernel when the
+  corpus and the query set are both large), so the build runs no per-hub
+  tree kernel. The
+  reference's sequential per-hub trees (DistCoverTree.cpp:814-934) are
+  ``local_trees(model)``: built on demand from ``members`` by the numpy
+  cover-tree kernel, for debug dumps and tests. Their rows carry global
+  point ids + coords, which eliminates the reference's local→global remap
+  join (DistCoverTree.cpp:1134-1139) by schema design.
 
 Checkpointed per ``checkpoint_every`` iterations (state parquet + driver JSON
 + lineage metrics), so builds resume mid-level — the north rule's
@@ -67,9 +68,12 @@ class CoverTreeModel:
     num_global_iters: int
     has_global_leaves: bool = True  # any leaf vertices from the global phase?
     # (hub_id, point_id, px, py): each hub's UNIQUE member points, the local
-    # phase's only output, None if fully global. The routed query's stage-2
-    # side (joined on hub and grid cell) and the input of ``local_trees``.
+    # phase's only output — checkpointed pre-hash-partitioned + pre-sorted on
+    # hub_id, None if fully global. The routed query's stage-2 side (its
+    # cogroup reads it with no exchange and no sort) and the input of
+    # ``local_trees``.
     members: DataFrame | None = None
+    n_members: int = 0  # row count of ``members``, known at build time
 
 
 # --- executor-resident global phase -------------------------------------------
@@ -788,9 +792,10 @@ def build_cover_tree(
 
     # --- hot-hub sub-split (load-balance the local phase) --------------------
     # A hub_cutoff break can leave one dense hub owning 10-15% of the corpus;
-    # its one wide member box then draws the routes of most queries. The
-    # reference's only
-    # lever is more global rounds (the imbalance criterion,
+    # its single ``members`` group then gates the grouped (cogroup) stage 2
+    # of every large routed query (and at cluster scale risks executor OOM);
+    # the JVM stage-2 join keys on (hub, cell) and is not gated by it. The
+    # reference's only lever is more global rounds (the imbalance criterion,
     # DistCoverTree.cpp:746-748); here oversized hubs are instead cracked in
     # ONE vectorized pass: members gridded at the hub's ball scale, cells
     # Morton-packed into ≤max_pts groups on the driver, each group registered
@@ -901,7 +906,7 @@ def build_cover_tree(
         import uuid as _uuid
 
         path = os.path.join(tmp_dir, f"covergrid-flush-{_uuid.uuid4().hex}")
-        rounds.write_applied(path)
+        final_counts = rounds.write_applied(path)
         bounce_dirs.append(path)
         state = spark.read.parquet(path)
         active_state = state
@@ -967,27 +972,37 @@ def build_cover_tree(
             _trace("hub_balance", t0)
 
     # --- local phase (DistCoverTree.cpp:823-905 analog) ---------------------
-    # ONE checkpoint is the local phase: each hub's active points, projected
-    # from the final state with no shuffle. No reader needs them grouped by
-    # hub: the routed query's stage 2 joins them on (hub, cell), and the
-    # hub-box aggregate and ``local_trees`` group them themselves. No per-hub
+    # ONE checkpoint is the local phase: each hub's active points, shuffled
+    # and sorted on the hub exactly once and materialized with AQE off, so
+    # LogicalRDD keeps outputPartitioning/outputOrdering (the adaptive wrapper
+    # would report UnknownPartitioning). The routed query's cogroup and the
+    # hub-box aggregate read it with ZERO exchange and ZERO sort (its JVM
+    # join re-keys it on (hub, cell) instead). No per-hub
     # tree is built here: queries never read one (``local_trees`` builds them
-    # on demand).
+    # on demand). The explicit repartition also keeps this exchange at
+    # n_parts tasks instead of the handful AQE would coalesce it to.
     members = None
     local_roots: list[int] = []
     if chains:
         local_roots = sorted(chains.keys())
         t0 = time.time()
-        members = (
-            active_state.where(F.col("hub_vtx") >= 0)
-            .select(
-                F.col("hub_vtx").alias("hub_id"),
-                F.col("pid").alias("point_id"),
-                F.col("x").alias("px"),
-                F.col("y").alias("py"),
+        aqe_prev = spark.conf.get("spark.sql.adaptive.enabled")
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
+        try:
+            members = (
+                active_state.where(F.col("hub_vtx") >= 0)
+                .select(
+                    F.col("hub_vtx").alias("hub_id"),
+                    F.col("pid").alias("point_id"),
+                    F.col("x").alias("px"),
+                    F.col("y").alias("py"),
+                )
+                .repartition(n_parts, "hub_id")
+                .sortWithinPartitions("hub_id")
+                .localCheckpoint(eager=True)
             )
-            .localCheckpoint(eager=True)
-        )
+        finally:
+            spark.conf.set("spark.sql.adaptive.enabled", aqe_prev)
         _trace("members", t0)
 
     # --- assemble top-tree vertex table --------------------------------------
@@ -1025,6 +1040,7 @@ def build_cover_tree(
         points=points, local_roots=local_roots,
         metrics=_metrics_df(spark, metrics), num_global_iters=it,
         has_global_leaves=has_leaves, members=members,
+        n_members=sum(final_counts.values()) if members is not None else 0,
     )
 
 
@@ -1035,8 +1051,8 @@ def local_trees(model: CoverTreeModel) -> DataFrame | None:
     finishes against ``members``); debug dumps and tests do.
 
     Each hub's level and point come from its top-tree vertex. The hub table
-    is broadcast onto ``members``, and the grouped kernel shuffles the
-    members by hub (debug dumps and tests only, never a query). The kernel sees
+    is broadcast onto ``members``, which is already partitioned and sorted
+    on the hub, so the grouped kernel runs with no exchange. The kernel sees
     the hub point first, then the members by ascending point id: the output
     is deterministic for a given model."""
     if model.members is None:

@@ -8,9 +8,11 @@ member boxes intersect the query ball (DistCoverTree.cpp:1088-1125
 ``local_radii_query`` semantics), then route each query to its target hubs
 and finish against the hubs' ``members`` rows — the Spark analog of the
 reference's batched query-routing design note (idea.txt:1-21, SURVEY J6).
-Both stages are JVM joins: stage 1 probes broadcast literal tables built
-from the top tree, stage 2 equi-joins the routes with ``members`` on
-(hub, grid cell) and lets the planner choose the join strategy.
+Stage 1 probes broadcast literal tables built from the top tree. Stage 2
+equi-joins the routes with ``members`` on (hub, grid cell) and lets the
+planner choose the join strategy, except when both the query set and the
+corpus are large: then a cogroup on the hub finishes each hub with a numpy
+grid kernel.
 
 Result sets are unioned + dedup'd (the reference's ``allgather_distinct``,
 DistCoverTree.cpp:657-677).
@@ -25,7 +27,15 @@ from pyspark.sql import functions as F
 from parallelcovertree_spark.functions.cells import cell_side, explode_k_ring, with_cell
 from parallelcovertree_spark.functions.geo import dist2_expr
 from parallelcovertree_spark.plans.covertree import CoverTreeModel
-from parallelcovertree_spark.plans.local_tree import TreeArrays
+from parallelcovertree_spark.plans.local_tree import TreeArrays, grid_radius_pairs
+
+# Stage 2 takes the grouped (cogroup) finish only when the corpus's members
+# AND the query set both exceed this many rows. Measured on 4 cores: at 57k
+# Gaussian points the JVM join broadcasts ``members`` and runs the ε-graph in
+# 1.9 s against the cogroup's 3.6 s; at 1M points it shuffles and sorts nine
+# copies of every route and takes 20-25 s against the cogroup's 10-16 s, while
+# a 10k-query call is even between the two. Sizes between were not measured.
+_GROUPED_MIN_ROWS = 100_000
 
 
 def _top_tree_arrays(model: CoverTreeModel) -> tuple[TreeArrays, np.ndarray, np.ndarray]:
@@ -122,9 +132,12 @@ def tree_radius_join(
     bound). Stage 2 covers each corpus point at most once (one owning hub);
     leaves are disjoint from local trees by deactivation.
 
-    One plan serves every query-set size: stage 2 is an unhinted equi-join
-    of the ring-exploded routes with ``members`` on (hub_id, cell), so the
-    answer never depends on which join strategy the planner picks."""
+    Stage 2 has two plans with one answer: an unhinted equi-join of the
+    ring-exploded routes with ``members`` on (hub_id, cell), whose join
+    strategy the planner picks, and, when the corpus and the query set both
+    exceed ``_GROUPED_MIN_ROWS`` rows, a cogroup on the hub with a numpy grid
+    kernel. The query set is counted (one job) only for a corpus that large;
+    a counted query set at or under the limit has its routes broadcast."""
     spark = queries.sparkSession
     tree, upid, stop = _top_tree_arrays(model)
     vid_of_stop = np.array(model.local_roots, dtype=np.int64)
@@ -264,31 +277,83 @@ def tree_radius_join(
     if model.members is None:
         return hits_top.select(F.col("qid").alias("src"), F.col("pid").alias("dst"))
 
-    # --- stage 2: one JVM equi-join on (hub, cell) ---------------------------
-    # The routed queries explode to their 9-cell ring at ``cell_side(r)``;
-    # each member that stage 1 does not test gets its own cell, and the two
-    # sides join on (hub_id, cell) with the exact d² ≤ r² filter. A member
-    # within r of a routed query lies in its ring, and members are unique
-    # rows, so the pairs are distinct. No broadcast hint: the planner and AQE
-    # pick the strategy from the sizes. A side under the broadcast threshold
-    # is broadcast (at 57k points that is ``members`` itself, for ε-graph and
-    # selective calls alike, so stage 2 shuffles nothing); otherwise the
-    # join shuffles both sides on (hub_id, cell).
-    ring_route = explode_k_ring(to_route, side, k=1, x="qx", y="qy", out="_mcell")
-    mem = with_cell(
-        model.members.where(~F.col("point_id").isin(s1_ids)),
-        side, x="px", y="py", out="_mcell",
-    )
-    hits_local = (
-        mem.alias("m")
-        .join(
-            ring_route.alias("t"),
-            (F.col("m.hub_id") == F.col("t.hub_id"))
-            & (F.col("m._mcell") == F.col("t._mcell")),
+    # --- stage 2: finish the routes against their hubs' members ------------
+    # Members that stage 1 tests are dropped up front; a filter keeps the
+    # checkpoint's hub partitioning and order. Members are unique rows, each
+    # in one hub, so both plans emit distinct pairs.
+    mem = model.members.where(~F.col("point_id").isin(s1_ids))
+    n_q = q.count() if model.n_members > _GROUPED_MIN_ROWS else None
+    if n_q is None or n_q <= _GROUPED_MIN_ROWS:
+        # JVM equi-join: the routes explode to their 9-cell ring at
+        # ``cell_side(r)`` and each member gets its own cell; a member within
+        # r of a routed query lies in its ring. For a small corpus the
+        # planner picks the strategy (at 57k points it broadcasts
+        # ``members``). For a large one the count shows the routes are the
+        # small side, which the planner cannot see in a filtered query set:
+        # broadcasting them keeps ``members`` from being shuffled (bench.py's
+        # 1M-point selective call, 3 pairs: 1.73/1.71/1.56 s hinted against
+        # 2.46/2.03/1.96 s unhinted).
+        ring_route = explode_k_ring(to_route, side, k=1, x="qx", y="qy", out="_mcell")
+        if n_q is not None:
+            ring_route = F.broadcast(ring_route)
+        hits_local = (
+            with_cell(mem, side, x="px", y="py", out="_mcell").alias("m")
+            .join(
+                ring_route.alias("t"),
+                (F.col("m.hub_id") == F.col("t.hub_id"))
+                & (F.col("m._mcell") == F.col("t._mcell")),
+            )
+            .where(dist2_expr("qx", "qy", "px", "py") <= F.lit(r * r))
+            .select("qid", F.col("point_id").alias("pid"))
         )
-        .where(dist2_expr("qx", "qy", "px", "py") <= F.lit(r * r))
-        .select("qid", F.col("point_id").alias("pid"))
-    )
+    else:
+        # cogroup on the hub: the routes shuffle once, ``members`` is read
+        # with no exchange and no sort, and a dense grid over each hub's
+        # members finds exactly its within-r members (the same pair set as
+        # the join above).
+        def stage2(routes_tb, mem_tb):
+            import pyarrow as pa
+
+            def col(tb, name):
+                return tb.column(name).combine_chunks().to_numpy(zero_copy_only=False)
+
+            hq = np.empty(0, np.int64)
+            if routes_tb.num_rows and mem_tb.num_rows:
+                pids = col(mem_tb, "point_id")
+                hq, hp = grid_radius_pairs(
+                    col(mem_tb, "px").astype(np.float64),
+                    col(mem_tb, "py").astype(np.float64),
+                    col(routes_tb, "qx"), col(routes_tb, "qy"), r,
+                )
+            if not len(hq):
+                return pa.table({
+                    "qid": pa.array(np.empty(0, np.int64), pa.int64()),
+                    "pids": pa.ListArray.from_arrays(
+                        pa.array(np.zeros(1, np.int32)),
+                        pa.array(np.empty(0, np.int64), pa.int64()),
+                    ),
+                })
+            # packed return leg: hq ascends, so one run-length pass packs
+            # each query's pids into a ListArray (~15x fewer rows cross the
+            # Python->JVM boundary at ε-graph densities); an explode rebuilds
+            # the pair rows JVM-side
+            gstart = np.flatnonzero(np.r_[True, hq[1:] != hq[:-1]])
+            offsets = np.zeros(len(gstart) + 1, dtype=np.int32)
+            offsets[1:-1] = gstart[1:]
+            offsets[-1] = len(hq)
+            return pa.table({
+                "qid": pa.array(col(routes_tb, "qid")[hq[gstart]], pa.int64()),
+                "pids": pa.ListArray.from_arrays(
+                    pa.array(offsets), pa.array(pids[hp], pa.int64())
+                ),
+            })
+
+        hits_local = (
+            to_route.groupBy("hub_id")
+            .cogroup(mem.groupBy("hub_id"))
+            .applyInArrow(stage2, "qid long, pids array<long>")
+            .select("qid", F.explode("pids").alias("pid"))
+        )
     # sources are pairwise disjoint (see docstring) → plain union, no shuffle
     return hits_top.unionByName(hits_local).select(
         F.col("qid").alias("src"), F.col("pid").alias("dst")

@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from parallelcovertree_spark.oracle import epsilon_graph_np
 from parallelcovertree_spark.plans.covertree import build_cover_tree, local_trees
+from parallelcovertree_spark.plans import query
 from parallelcovertree_spark.plans.query import tree_epsilon_graph, tree_radius_join
 from parallelcovertree_spark.sources.synthetic import (
     gaussian_points_np,
@@ -33,15 +34,18 @@ def test_global_build_epsilon_matches_bruteforce(spark):
 
 
 @pytest.mark.parametrize("cutoff,n,r", [(8, 600, 0.5), (8, 600, 2.0), (32, 1000, 1.0)])
-def test_two_phase_build_epsilon_matches_bruteforce(spark, cutoff, n, r):
-    """Global phase + hubs: routed queries finish against ``members``."""
+def test_two_phase_build_epsilon_matches_bruteforce(spark, monkeypatch, cutoff, n, r):
+    """Global phase + hubs: routed queries finish against ``members``, by the
+    JVM join (small corpus) and by the grouped cogroup finish (forced)."""
     pts = synthetic_points(spark, n).persist()
     model = build_cover_tree(pts, hub_cutoff=cutoff)
     assert local_trees(model) is not None
     assert len(model.local_roots) >= cutoff
-    got = _edges(tree_epsilon_graph(model, r))
+    assert model.n_members == model.members.count()
     want = epsilon_graph_np(gaussian_points_np(n), r)
-    assert got == want
+    assert _edges(tree_epsilon_graph(model, r)) == want
+    monkeypatch.setattr(query, "_GROUPED_MIN_ROWS", -1)
+    assert _edges(tree_epsilon_graph(model, r)) == want, "grouped"
     pts.unpersist()
 
 
@@ -63,23 +67,29 @@ def test_driver_and_block_paths_identical(spark):
 
     assert vset(m_drv) == vset(m_blk)
     assert lset(m_drv) == lset(m_blk)
+    assert m_drv.n_members == m_blk.n_members == m_drv.members.count()
     assert _edges(tree_epsilon_graph(m_drv, 1.0)) == _edges(tree_epsilon_graph(m_blk, 1.0))
     pts.unpersist()
 
 
-def test_radius_join_external_queries(spark):
-    """Queries that are not corpus points (true search, not self-join)."""
+def test_radius_join_external_queries(spark, monkeypatch):
+    """Queries that are not corpus points (true search, not self-join), under
+    every stage-2 plan: the planner-chosen join (small corpus), the join with
+    the counted routes broadcast (corpus over the limit, 50 queries under
+    it) and the grouped cogroup finish (both over it)."""
     pts = synthetic_points(spark, 400).persist()
     model = build_cover_tree(pts, hub_cutoff=16)
+    assert model.n_members > 100
     qs = synthetic_points(spark, 50, seed=7)
-    got = _edges(tree_radius_join(model, qs, 1.5))
     corpus = gaussian_points_np(400)
     queries = gaussian_points_np(50, seed=7)
     cxy = corpus[["x", "y"]].to_numpy(np.float32).astype(np.float64)
     qxy = queries[["x", "y"]].to_numpy(np.float32).astype(np.float64)
     d2 = ((qxy[:, None, :] - cxy[None, :, :]) ** 2).sum(axis=2)
     want = {(int(a), int(b)) for a, b in zip(*np.nonzero(d2 <= 1.5 * 1.5))}
-    assert got == want
+    for limit in (query._GROUPED_MIN_ROWS, 100, -1):
+        monkeypatch.setattr(query, "_GROUPED_MIN_ROWS", limit)
+        assert _edges(tree_radius_join(model, qs, 1.5)) == want, limit
     pts.unpersist()
 
 

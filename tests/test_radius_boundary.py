@@ -27,6 +27,7 @@ from parallelcovertree_spark.operators.knn import knn_join_block_kernel
 from parallelcovertree_spark.oracle import epsilon_graph_np, knn_np
 from parallelcovertree_spark.plans.covertree import build_cover_tree
 from parallelcovertree_spark.plans.local_tree import grid_radius_pairs
+from parallelcovertree_spark.plans import query
 from parallelcovertree_spark.plans.query import tree_radius_join
 
 R = 0.1
@@ -113,10 +114,11 @@ def boundary_corpus(spark):
 
 
 @pytest.mark.parametrize("cutoff", [None, 4])
-def test_tree_radius_join_boundary(spark, boundary_corpus, cutoff):
-    """Stage 1 (global tree and leaves) and the stage-2 join under both
-    strategies the planner can pick: the session default (a broadcast of
-    the small side) and a shuffled join with broadcasts switched off."""
+def test_tree_radius_join_boundary(spark, boundary_corpus, monkeypatch, cutoff):
+    """Stage 1 (global tree and leaves) and every stage-2 plan: the JVM join
+    under both strategies the planner can pick (the session default, a
+    broadcast of the small side, and a shuffled join with broadcasts
+    switched off) and the grouped cogroup finish."""
     pdf, pts = boundary_corpus
     model = build_cover_tree(pts, hub_cutoff=cutoff)
     assert (model.members is not None) == (cutoff is not None)
@@ -130,3 +132,6 @@ def test_tree_radius_join_boundary(spark, boundary_corpus, cutoff):
             assert _edges(tree_radius_join(model, pts, R32)) == want, threshold
     finally:
         spark.conf.set(key, prev)
+    # every corpus and query set is "large": stage 2 takes the cogroup
+    monkeypatch.setattr(query, "_GROUPED_MIN_ROWS", -1)
+    assert _edges(tree_radius_join(model, pts, R32)) == want, "grouped"

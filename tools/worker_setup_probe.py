@@ -3,8 +3,9 @@
 Runs at ``local[4]`` with 16 shuffle partitions, each call under its own job
 group: one warm-up kNN call (20k points), then three
 ``knn_join_block_kernel(k=10)`` calls on 150k geocoder points each; the kNN
-kernel is the engine's Python-UDF hot path (the cover-tree build and the
-routed tree queries run none). Spark writes an uncompressed, non-rolling
+kernel is the engine's Python-UDF hot path (the cover-tree build runs none,
+and a routed tree query runs one only when its corpus and query set both
+exceed 100k rows). Spark writes an uncompressed, non-rolling
 event log into the given directory. The script then prints one JSON object:
 the wall time of every call and, per job group, the per-task median, mean
 and sum of Spark's Python SQL metrics ("time to start / initialize / run
