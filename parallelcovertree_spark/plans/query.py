@@ -31,10 +31,11 @@ from parallelcovertree_spark.plans.local_tree import TreeArrays, grid_radius_pai
 
 # Stage 2 takes the grouped (cogroup) finish only when the corpus's members
 # AND the query set both exceed this many rows. Measured on 4 cores: at 57k
-# Gaussian points the JVM join broadcasts ``members`` and runs the ε-graph in
-# 1.9 s against the cogroup's 3.6 s; at 1M points it shuffles and sorts nine
-# copies of every route and takes 20-25 s against the cogroup's 10-16 s, while
-# a 10k-query call is even between the two. Sizes between were not measured.
+# Gaussian points the JVM join broadcasts ``members`` and ran the ε-graph in
+# 1.9 s against the cogroup's 3.6 s (one traced pair); at 1M points it
+# shuffles and sorts nine copies of every route and took 20-25 s against the
+# cogroup's 10-16 s (3 processes each), while a 10k-query call was even
+# between the two. Sizes between were not measured.
 _GROUPED_MIN_ROWS = 100_000
 
 
